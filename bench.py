@@ -297,10 +297,10 @@ def main() -> None:
     msgs = random_messages(99, n=20000)
     raw = spark.createDataFrame(msgs, schema=RAW_SCHEMA)
     n_rows = raw.count()  # materialize input outside the timing
-    # replay runs under the micro-batch configuration the streaming sink
-    # uses: batch-size-scaled initial shuffle partitions, AQE off for the
-    # small batch, fused tagged-union materialization of all four state
-    # tables in one job
+    # replay runs under the configuration of the streaming sink's
+    # bootstrap commit: batch-size-scaled initial shuffle partitions, AQE
+    # off for the small batch, fused tagged-union materialization of all
+    # four state tables in one job
     with tuned_for_batch(spark, n_rows):
         timings.time(
             "temporal_replay_20k_events",

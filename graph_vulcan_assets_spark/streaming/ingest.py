@@ -21,7 +21,13 @@ O(state). Each state table is hash-bucketed by its natural key
 - seeds ONLY the state rows whose entity keys the batch touches
   (broadcast semi-join on the batch's key set), replays that bounded
   subset, unions the same-bucket remainder back (a pure columnar copy),
-- and rewrites ONLY those buckets, as ``batch=N/bucket=B`` version dirs.
+- and rewrites ONLY those buckets, as ``batch=N/bucket=B`` version dirs
+  of one parquet file each (the materialized state is hash-partitioned
+  on (table, bucket) before the writes).
+Only the bootstrap commit (no batch acknowledged yet, a replay from
+scratch) runs under ``tuned_for_batch``'s small-batch confs; every later
+commit plans under the session's own confs (AQE on, default shuffle
+partitions), which suit its joins against state read from disk.
 Untouched buckets are never read, never rewritten — their files stay
 byte-identical across batches (test-pinned). The live view of a table is,
 per bucket, the newest ACKNOWLEDGED version; the commit marker is written
@@ -59,7 +65,7 @@ from graph_vulcan_assets_spark.log import get_logger
 from graph_vulcan_assets_spark.plans.temporal import (
     RAW_SCHEMA,
     UNEXPIRED,
-    batch_shuffle_partitions,
+    coalesce_small_batch,
     decode_events,
     events_from_decoded,
     replay_from_events,
@@ -250,26 +256,56 @@ class TemporalGraphStream:
             return None
         return {t: self._read_buckets(t, None) for t in STATE_TABLES}
 
+    def _tagged_bucket(self) -> Column:
+        """Bucket id of a row of the tagged state union
+        (`tag_union_state`), by its table's bucket key."""
+        out = None
+        for t in STATE_TABLES:
+            hit = F.col("__table") == t
+            b = bucket_of(BUCKET_KEYS[t], self.n_buckets)
+            out = F.when(hit, b) if out is None else out.when(hit, b)
+        return out
+
+    def _with_bucket(self, df: DataFrame, table: str) -> DataFrame:
+        return df.withColumn("bucket", bucket_of(BUCKET_KEYS[table], self.n_buckets))
+
     def _index_pairs(self, parent_of: DataFrame) -> DataFrame:
-        """Distinct (parent key → child bucket) pointers for edge rows."""
+        """(parent key → child bucket) pointers for edge rows, repeats
+        included (`_write_index` drops them)."""
         return parent_of.select(
             "parent_type",
             "parent_identifier",
             bucket_of(BUCKET_KEYS["parent_of"], self.n_buckets).alias("child_bucket"),
-        ).distinct()
+        )
+
+    def _write_index(self, pairs: DataFrame, path: str) -> None:
+        """Write distinct index pointers under ``path``. The dedupe's
+        shuffle is hash-partitioned on the bucket column itself (one of
+        the dedupe's keys, so Spark plans no second exchange), which puts
+        each index bucket in one partition and one file."""
+        (
+            self._with_bucket(pairs, PARENT_IDX)
+            .repartition("bucket")
+            .distinct()
+            .write.partitionBy("bucket")
+            .mode("overwrite")
+            .parquet(path)
+        )
 
     def _write_state(self, state: dict[str, DataFrame], batch_id: int) -> None:
         """Write each table's (touched-bucket) content as a new
         ``batch=N/bucket=B`` version per present bucket — O(touched
         buckets), never O(state). The live view resolves per bucket to the
         newest acknowledged version, so buckets absent from this batch
-        keep serving their prior files untouched."""
+        keep serving their prior files untouched. Each bucket's rows of
+        ``state`` sit in one partition (the tagged checkpoint in
+        `_apply_batch_inner`), so each version is one file."""
         for t in STATE_TABLES:
             df = state[t]
             if t not in self._schemas:
                 self._schemas[t] = df.schema
             (
-                df.withColumn("bucket", bucket_of(BUCKET_KEYS[t], self.n_buckets))
+                self._with_bucket(df, t)
                 .write.partitionBy("bucket")
                 .mode("overwrite")
                 .parquet(os.path.join(self.state_dir, t, f"batch={batch_id}"))
@@ -287,31 +323,20 @@ class TemporalGraphStream:
                     bucket_of(BUCKET_KEYS[PARENT_IDX], self.n_buckets)
                 ).distinct().collect()
             }
-            merged = (
-                self._read_buckets(PARENT_IDX, idx_buckets)
-                .unionByName(new_pairs)
-                .distinct()
-            )
+            merged = self._read_buckets(PARENT_IDX, idx_buckets).unionByName(new_pairs)
         elif self._applied_batches():
             # state predates the index (pre-index layout): one-time
             # backfill from the full live edge set, merged with this
             # batch's content
-            merged = (
-                self._index_pairs(self._read_buckets("parent_of", None))
-                .unionByName(new_pairs)
-                .distinct()
-            )
+            merged = self._index_pairs(
+                self._read_buckets("parent_of", None)
+            ).unionByName(new_pairs)
             self._schemas[PARENT_IDX] = new_pairs.schema
         else:
             merged = new_pairs
             self._schemas[PARENT_IDX] = new_pairs.schema
-        (
-            merged.withColumn(
-                "bucket", bucket_of(BUCKET_KEYS[PARENT_IDX], self.n_buckets)
-            )
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(self.state_dir, PARENT_IDX, f"batch={batch_id}"))
+        self._write_index(
+            merged, os.path.join(self.state_dir, PARENT_IDX, f"batch={batch_id}")
         )
         self._save_meta()
         # marker written last: a crash mid-write leaves the batch
@@ -427,14 +452,7 @@ class TemporalGraphStream:
         # picks it now, and any later batch id supersedes its touched
         # buckets exactly as with a normal write
         newest = self._applied_batches()[-1]
-        (
-            rebuilt.withColumn(
-                "bucket", bucket_of(BUCKET_KEYS[PARENT_IDX], self.n_buckets)
-            )
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(staging, f"batch={newest}"))
-        )
+        self._write_index(rebuilt, os.path.join(staging, f"batch={newest}"))
         with open(os.path.join(staging, "_ready"), "w") as f:
             f.write("ok")
         self._finish_index_compaction()
@@ -442,17 +460,25 @@ class TemporalGraphStream:
 
     # ---- incremental application ---------------------------------------
     def apply_batch(self, raw_batch: DataFrame, batch_id: int) -> None:
-        if batch_id in self._applied_batches():
+        applied = self._applied_batches()
+        if batch_id in applied:
             # replayed micro-batch after recovery: idempotent skip
             _log.info("batch %d already applied, skipping (idempotent replay)", batch_id)
             return
 
-        # scale initial shuffle partitions to the micro-batch size and drop
-        # AQE for small batches: the replay is many small shuffles, and
-        # per-partition + per-stage fixed cost dominates tiny batches (see
-        # temporal.tuned_for_batch)
+        if applied:
+            # incremental commit: runs under the session's own confs. Its
+            # plan joins the batch's keys against state read from disk,
+            # which AQE re-plans far better than the small-batch confs do
+            # (measured in temporal.tuned_for_batch)
+            self._apply_batch_inner(raw_batch, batch_id, bootstrap=False)
+            return
+        # bootstrap commit, a replay from scratch: scale initial shuffle
+        # partitions to the batch size and drop AQE for small batches —
+        # the replay is many small shuffles, and per-partition + per-stage
+        # fixed cost dominates (temporal.tuned_for_batch)
         with tuned_for_batch(self.spark, raw_batch.count()):
-            self._apply_batch_inner(raw_batch, batch_id)
+            self._apply_batch_inner(raw_batch, batch_id, bootstrap=True)
 
     def _touched_buckets(self, touched_assets: DataFrame, touched_teams: DataFrame) -> dict[str, set[int]]:
         """Bucket ids each state table must read+rewrite for this batch.
@@ -466,21 +492,22 @@ class TemporalGraphStream:
         no index (state written by the pre-index layout) the legacy
         key-only scan of parent_of is the fallback; the next write
         backfills the index. The collects are bounded by n_buckets —
-        scalar-sized, like the batch-count the tuner already takes.
+        scalar-sized; the asset and team buckets share one.
         """
         nb = self.n_buckets
-        ab = {
-            r[0]
-            for r in touched_assets.select(
-                F.pmod(F.xxhash64("asset_type", "identifier"), F.lit(nb)).cast("int")
-            ).distinct().collect()
-        }
-        tb = {
-            r[0]
-            for r in touched_teams.select(
-                F.pmod(F.xxhash64("team_id"), F.lit(nb)).cast("int")
-            ).distinct().collect()
-        }
+        key_buckets = touched_assets.select(
+            F.lit(True).alias("is_asset"),
+            F.pmod(F.xxhash64("asset_type", "identifier"), F.lit(nb)).cast("int").alias("b"),
+        ).unionByName(
+            touched_teams.select(
+                F.lit(False).alias("is_asset"),
+                F.pmod(F.xxhash64("team_id"), F.lit(nb)).cast("int").alias("b"),
+            )
+        )
+        ab: set[int] = set()
+        tb: set[int] = set()
+        for is_asset, b in key_buckets.distinct().collect():
+            (ab if is_asset else tb).add(b)
         eb = set(ab)
         p_keys = F.broadcast(
             touched_assets.select(
@@ -514,20 +541,15 @@ class TemporalGraphStream:
             }
         return {"assets": ab, "teams": tb, "owns": ab, "parent_of": eb}
 
-    def _apply_batch_inner(self, raw_batch: DataFrame, batch_id: int) -> None:
+    def _apply_batch_inner(self, raw_batch: DataFrame, batch_id: int, bootstrap: bool) -> None:
         if self.annotation_key is not None:
             decoded = decode_events(raw_batch, self.annotation_key)
         else:
             decoded = decode_events(raw_batch)
-        # cap the batch's map-side parallelism at the (batch-scaled)
-        # shuffle-partition count — same rationale and no-op-at-scale
-        # argument as plans.temporal.replay (narrow coalesce; we are
-        # inside tuned_for_batch, so the conf is the scaled value)
-        decoded = decoded.coalesce(
-            int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        )
-        ev = events_from_decoded(decoded)
-        if not self._applied_batches():
+        # a small bootstrap batch's map side narrows to the batch-scaled
+        # partition count; any other input keeps its scan parallelism
+        ev = events_from_decoded(coalesce_small_batch(decoded))
+        if bootstrap:
             new_state = replay_from_events(ev)
         else:
             # O(batch) incremental step: read ONLY the buckets this
@@ -555,8 +577,14 @@ class TemporalGraphStream:
         # as ONE tagged-union job (shared replay frames computed once, one
         # scheduling pass instead of four) and the lineage is cut so plans
         # don't grow across batches; the per-table writes below are cheap
-        # filters over the checkpointed blocks
-        tagged = tag_union_state(new_state).localCheckpoint(eager=True)
+        # filters over the checkpointed blocks. Hash-partitioning the
+        # union on (table, bucket) first puts each bucket of each table in
+        # ONE partition, so every bucket version is written as one file
+        # without a shuffle per write.
+        tagged = tag_union_state(new_state)
+        tagged = tagged.repartition(
+            F.col("__table"), self._tagged_bucket()
+        ).localCheckpoint(eager=True)
         new_state = split_tagged_state(tagged)
         if self.fault is not None:
             self.fault(batch_id)  # crash injection point (pre-commit)

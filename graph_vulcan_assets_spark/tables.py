@@ -354,7 +354,12 @@ def tuned_for_input(spark: SparkSession, n_bytes: int):
     enough that the partition count dropped below the session default —
     AQE's per-query-stage re-planning jobs are pure overhead once the
     shuffle is already right-sized; large inputs keep AQE and the
-    session default untouched."""
+    session default untouched.
+
+    The confs are session-global: the block assumes nothing else runs
+    jobs on the same SparkSession meanwhile (a concurrent query would
+    plan under the scaled confs). Both are restored on exit, also when
+    the block raises."""
     conf = spark.conf
     prev_shuffle = conf.get("spark.sql.shuffle.partitions")
     prev_aqe = conf.get("spark.sql.adaptive.enabled")

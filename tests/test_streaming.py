@@ -544,3 +544,85 @@ def test_sink_batch_time_independent_of_accumulated_state(spark, tmp_path):
     assert read_final_state(spark, stream) == state_from_interpreter(all_msgs)
     # and the index still covers every live edge
     assert _edge_pointers(stream, live_only=True) <= _index_pointers(stream)
+
+
+def test_one_file_per_bucket_version(spark, tmp_path):
+    """Every bucket version is ONE parquet file, after a bootstrap commit,
+    an incremental commit and an index compaction: a read of a bucket
+    opens one file, and a write does not fan each task out over every
+    bucket dir."""
+    import glob
+
+    from graph_vulcan_assets_spark.plans.temporal import RAW_SCHEMA as RS
+    from graph_vulcan_assets_spark.streaming.ingest import PARENT_IDX, STATE_TABLES
+
+    msgs = fixtures.random_messages(17, n=120)
+    state_dir = str(tmp_path / "state")
+    stream = TemporalGraphStream(spark, state_dir)
+
+    def files_per_version():
+        out = {}
+        for t in (*STATE_TABLES, PARENT_IDX):
+            for d in glob.glob(os.path.join(state_dir, t, "batch=*", "bucket=*")):
+                out[d] = len(glob.glob(os.path.join(d, "*.parquet")))
+        return out
+
+    for bid, chunk in enumerate([msgs[:80], msgs[80:]]):
+        stream.apply_batch(spark.createDataFrame(chunk, schema=RS), bid)
+        versions = files_per_version()
+        written = [d for d in versions if f"{os.sep}batch={bid}{os.sep}" in d]
+        assert len(written) > len(STATE_TABLES), "batch wrote too few buckets to test"
+        assert {versions[d] for d in written} == {1}, versions
+    stream.compact_parent_index()
+    assert set(files_per_version().values()) == {1}
+    assert read_final_state(spark, stream) == state_from_interpreter(msgs)
+
+
+def _confs(spark):
+    return (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+
+
+def _commit_confs(spark, tmp_path, fail_on=None):
+    """Apply two batches, recording the AQE flag and the shuffle-partition
+    count each commit sees from inside (the ``fault`` hook runs in the
+    commit, just before its state write)."""
+    from graph_vulcan_assets_spark.plans.temporal import RAW_SCHEMA as RS
+
+    seen = {}
+
+    def fault(batch_id):
+        seen[batch_id] = _confs(spark)
+        if batch_id == fail_on:
+            raise RuntimeError("injected crash")
+
+    msgs = fixtures.golden_messages()
+    stream = TemporalGraphStream(spark, str(tmp_path / "state"), fault=fault)
+    for bid, chunk in enumerate([msgs[:10], msgs[10:]]):
+        stream.apply_batch(spark.createDataFrame(chunk, schema=RS), bid)
+    return seen
+
+
+def test_incremental_commit_runs_under_session_confs(spark, tmp_path):
+    """Only the bootstrap commit (no batch acknowledged yet) is tuned for
+    a small batch; an incremental commit plans under the session's own
+    AQE flag and shuffle-partition count, and both are restored after the
+    bootstrap."""
+    session = _confs(spark)
+    # the session must differ from what the tiny bootstrap is tuned to
+    assert session[0] == "true" and int(session[1]) > 4
+    seen = _commit_confs(spark, tmp_path)
+    assert seen[0] == ("false", "4")  # tiny bootstrap: batch-scaled, AQE off
+    assert seen[1] == session
+    assert _confs(spark) == session
+
+
+def test_confs_restored_after_failed_bootstrap(spark, tmp_path):
+    """A bootstrap commit that raises inside ``tuned_for_batch`` must
+    still hand the session back with its own confs."""
+    session = _confs(spark)
+    with pytest.raises(Exception, match="injected crash"):
+        _commit_confs(spark, tmp_path, fail_on=0)
+    assert _confs(spark) == session

@@ -165,3 +165,29 @@ def test_decode_survives_poison_messages(spark):
     decoded = decode_events(df)
     idents = sorted(r.identifier for r in decoded.collect())
     assert idents == ["dup2.example.com", "ok.example.com"]
+
+
+def test_small_batch_coalesce_keeps_large_input_parallelism(spark):
+    """The narrow coalesce of a replay's input applies only when
+    ``tuned_for_batch`` LOWERED the partition count for a small batch. An
+    input with more partitions than ``spark.sql.shuffle.partitions`` and
+    enough rows that ``batch_shuffle_partitions`` saturates keeps every
+    scan partition, as does any input outside ``tuned_for_batch``."""
+    from graph_vulcan_assets_spark.plans.temporal import (
+        batch_shuffle_partitions,
+        coalesce_small_batch,
+        tuned_for_batch,
+    )
+
+    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    wide = 2 * session
+    large = spark.range(0, session * 2500, 1, wide)
+    n_large = large.count()
+    assert batch_shuffle_partitions(n_large, session) == session  # saturated
+    with tuned_for_batch(spark, n_large):
+        assert coalesce_small_batch(large).rdd.getNumPartitions() == wide
+    assert coalesce_small_batch(large).rdd.getNumPartitions() == wide
+
+    small = spark.range(0, 1000, 1, wide)
+    with tuned_for_batch(spark, small.count()):
+        assert coalesce_small_batch(small).rdd.getNumPartitions() == 4
