@@ -17,6 +17,44 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the default heap is a quarter of the host (the JVM's own
+# MaxRAMPercentage=25), never more than this
+MAX_DEFAULT_DRIVER_MEM_MB = 24 * 1024
+# cgroup v2, then v1; "max" (v2) or a huge number (v1) means no limit
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def host_memory_bytes() -> int:
+    """Physical memory, or the cgroup memory limit when one is lower."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
+def driver_memory() -> str:
+    """The ``spark.driver.memory`` that :func:`get_spark` requests.
+
+    ``SPARK_GRAFT_DRIVER_MEM`` is used as given when set. Otherwise the
+    heap is ``min(24g, host memory / 4)``: a quarter leaves the rest of
+    the host to off-heap buffers, Python workers and the caller, and a
+    heap larger than the host lets G1 grow until the kernel kills the JVM.
+    """
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    mb = min(MAX_DEFAULT_DRIVER_MEM_MB, host_memory_bytes() // 4 // (1024 * 1024))
+    return f"{mb}m"
+
 
 def get_spark(
     app_name: str = "graph-vulcan-assets-spark",
@@ -26,19 +64,21 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
+    ``SPARK_GRAFT_DRIVER_MEM`` sets the driver heap; unset, it is sized to
+    the host, ``min(24g, host memory / 4)`` (see :func:`driver_memory`).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         # local mode is driver-only: this is the one memory knob that
-        # matters (takes effect at JVM launch, ignored afterwards)
-        .config("spark.driver.memory", driver_mem)
+        # matters (takes effect at JVM launch, ignored afterwards);
+        # SPARK_GRAFT_DRIVER_MEM, else min(24g, host memory / 4)
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
