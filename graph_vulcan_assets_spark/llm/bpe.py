@@ -44,7 +44,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graph_vulcan_assets_spark.registry import query
-from graph_vulcan_assets_spark.tables import input_size_bytes, load_table, tuned_for_input
+from graph_vulcan_assets_spark.plans.temporal import tuned_for_batch
+from graph_vulcan_assets_spark.tables import input_size_bytes, load_table
 
 # Lineage truncation cadence for bpe_encode_words' literal-merge loop
 # (kmeans idiom). bpe_train itself no longer checkpoints: since round 13
@@ -174,10 +175,11 @@ def bpe_train(docs: DataFrame, n_merges: int) -> tuple[DataFrame, DataFrame]:
     pair_expr = _pair_explode_expr()
     merge_col = _merge_expr(F.col("syms"), F.col("__ma"), F.col("__mb"))
     # input-scaled initial shuffle partitions + no AQE for the tiny
-    # per-iteration jobs (tables.tuned_for_input; saturates to the session
-    # default at corpus scale) — each iteration's shuffle carries only the
-    # aggregated pair table, and per-stage fixed cost dominates it
-    with tuned_for_input(spark, input_size_bytes(docs)):
+    # per-iteration jobs (temporal.tuned_for_batch by bytes; saturates to
+    # the session default at corpus scale) — each iteration's shuffle
+    # carries only the aggregated pair table, and per-stage fixed cost
+    # dominates it
+    with tuned_for_batch(spark, n_bytes=input_size_bytes(docs)):
         vocab = (
             word_counts(docs)
             .withColumn("syms", F.split(F.col("w"), ""))

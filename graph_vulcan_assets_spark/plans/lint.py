@@ -19,9 +19,6 @@ Checks (each is a documented production incident class):
 - ``no-pushdown``    a parquet scan whose ``PushedFilters`` is empty while
                      the plan filters the same relation above the scan —
                      the filter runs after a full read.
-- ``wide-scan``      a scan reading ≥90% of a table's columns under a
-                     projection that uses far fewer — column pruning lost
-                     (usually a UDF or a schema-opaque operation).
 
 ``lint`` returns findings (possibly empty); ``assert_scales`` raises.
 These are heuristics over ``explain('formatted')`` text — precise enough

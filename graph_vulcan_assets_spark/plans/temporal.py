@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from graph_vulcan_assets_spark.tables import scaled_shuffle_partitions
+
 UNEXPIRED = "9999-12-12 23:59:59"
 
 # vulcan/vulcan.go:30-58 — unknown JSON fields are dropped by the decoder,
@@ -655,13 +657,16 @@ _batch_parts: ContextVar[int | None] = ContextVar("batch_parts", default=None)
 
 
 @contextmanager
-def tuned_for_batch(spark, n_rows: int):
-    """Configure the session for a small-batch replay, restoring after.
+def tuned_for_batch(spark, n_rows: int | None = None, *, n_bytes: int | None = None):
+    """Configure the session for a small input, restoring after. The input
+    is sized by row count (``n_rows``, `batch_shuffle_partitions`: a
+    replay's micro-batch) or by bytes (``n_bytes``,
+    `tables.scaled_shuffle_partitions`: e.g. the BPE training loop's
+    iterate-over-a-bounded-table jobs); give exactly one.
 
     Two knobs, same rationale (fixed per-stage cost dominates small
-    batches):
-    - initial shuffle partitions scaled to the batch (see
-      `batch_shuffle_partitions`);
+    inputs):
+    - initial shuffle partitions scaled to the input;
     - AQE off WHEN the batch is small: AQE submits a separate job per
       query stage to re-plan at runtime, and with the shuffle already
       right-sized there is nothing left for it to improve — measured
@@ -683,10 +688,15 @@ def tuned_for_batch(spark, n_rows: int):
     plan under the scaled confs). Both confs are restored on exit, also
     when the block raises.
     """
+    if (n_rows is None) == (n_bytes is None):
+        raise TypeError("tuned_for_batch takes exactly one of n_rows, n_bytes")
     conf = spark.conf
     prev_shuffle = conf.get("spark.sql.shuffle.partitions")
     prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    parts = batch_shuffle_partitions(n_rows, int(prev_shuffle))
+    if n_rows is not None:
+        parts = batch_shuffle_partitions(n_rows, int(prev_shuffle))
+    else:
+        parts = scaled_shuffle_partitions(n_bytes, int(prev_shuffle))
     lowered = parts < int(prev_shuffle)
     conf.set("spark.sql.shuffle.partitions", str(parts))
     if lowered:

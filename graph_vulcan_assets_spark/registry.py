@@ -45,7 +45,6 @@ def load_all() -> None:
     import graph_vulcan_assets_spark.llm  # noqa: F401
     import graph_vulcan_assets_spark.sources.readers  # noqa: F401
     import graph_vulcan_assets_spark.streaming.stateful  # noqa: F401
-    import graph_vulcan_assets_spark.streaming.stateful_tws  # noqa: F401
 
 
 # Exposure order for ``queries()`` / ``oracle_sql()``. The driver runs its

@@ -5,8 +5,12 @@ The reference's whole write side is keyed upserts into an external store
 (inventory/inventory.go: create-or-update per asset/team/edge). Spark's
 parquet sink alone can only append or overwrite, so round 1/2 emulated
 MERGE with a full outer-join + full-snapshot rewrite — O(table) per
-batch. This module generalizes the round-3 streaming state sink's layout
-into a reusable storage primitive:
+batch. This module owns the bucket-version layout as a reusable storage
+primitive; its module-level functions (``bucket_of``, meta I/O, marker
+listing, ``live_versions``, ``read_versions``, ``prune_versions``) are
+also the state I/O of the streaming entity sink
+(streaming/ingest.TemporalGraphStream), which commits several tables
+under one marker:
 
 - rows live in ``bucket=B`` partitions, B = pmod(xxhash64(key), N) —
   co-partitioned by key, so a MERGE touches only the buckets the batch's
@@ -41,9 +45,112 @@ import os
 import shutil
 from collections import defaultdict
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+
+# ---- the bucket-version layout ------------------------------------------
+# Shared by BucketTable and the streaming entity sink
+# (streaming/ingest.TemporalGraphStream), which keeps several tables under
+# one commit marker. A table dir holds ``_meta.json`` and ``batch=N/bucket=B``
+# version dirs; which N are committed is the caller's marker listing.
+
+def bucket_of(cols, n_buckets: int) -> Column:
+    """Deterministic bucket id of a row: pmod(xxhash64(key), N)."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
+
+
+def load_meta(path: str) -> dict | None:
+    try:
+        with open(os.path.join(path, "_meta.json")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def save_meta(path: str, meta: dict) -> None:
+    """Atomic replace: a crash leaves the old meta or the new, never half."""
+    target = os.path.join(path, "_meta.json")
+    with open(target + ".tmp", "w") as f:
+        json.dump(meta, f)
+    os.replace(target + ".tmp", target)
+
+
+def list_markers(marker_dir: str) -> list[int]:
+    """Sorted ids of the commit markers in ``marker_dir``."""
+    return sorted(int(f) for f in os.listdir(marker_dir) if f.isdigit())
+
+
+def _version_dirs(path: str) -> list[tuple[int, str]]:
+    if not os.path.isdir(path):
+        return []
+    return [
+        (int(d.split("=", 1)[1]), os.path.join(path, d))
+        for d in os.listdir(path)
+        if d.startswith("batch=")
+    ]
+
+
+def _bucket_ids(version_dir: str) -> list[int]:
+    return [
+        int(bd.split("=", 1)[1])
+        for bd in os.listdir(version_dir)
+        if bd.startswith("bucket=")
+    ]
+
+
+def live_versions(path: str, committed: set[int]) -> dict[int, int]:
+    """bucket id → newest COMMITTED version that wrote it. Orphan versions
+    of crashed (unmarked) attempts are invisible."""
+    out: dict[int, int] = {}
+    for v, d in _version_dirs(path):
+        if v not in committed:
+            continue
+        for b in _bucket_ids(d):
+            if b not in out or v > out[b]:
+                out[b] = v
+    return out
+
+
+def read_versions(
+    spark: SparkSession, path: str, schema: StructType, versions: dict[int, int]
+) -> DataFrame:
+    """The rows of the given (bucket → version) dirs; only those dirs are
+    opened. No versions → a typed empty frame."""
+    paths = [
+        os.path.join(path, f"batch={v}", f"bucket={b}")
+        for b, v in sorted(versions.items())
+    ]
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def prune_versions(path: str, committed: list[int], keep: int) -> None:
+    """Per bucket, keep the newest ``keep`` committed versions; drop older
+    ones, orphans older than the newest commit, and version dirs left
+    with no bucket. Without pruning, storage grows O(commits × table)."""
+    if not committed:
+        return
+    newest = max(committed)
+    committed = set(committed)
+    per_bucket: dict[int, list[int]] = defaultdict(list)
+    for v, d in _version_dirs(path):
+        if v not in committed:
+            if v < newest:
+                shutil.rmtree(d, ignore_errors=True)
+            continue
+        for b in _bucket_ids(d):
+            per_bucket[b].append(v)
+    for b, vs in per_bucket.items():
+        for v in sorted(vs)[:-keep]:
+            shutil.rmtree(
+                os.path.join(path, f"batch={v}", f"bucket={b}"), ignore_errors=True
+            )
+    for v, d in _version_dirs(path):
+        if v < newest and not _bucket_ids(d):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 class BucketTable:
@@ -65,7 +172,7 @@ class BucketTable:
         self.key_cols = list(key_cols)
         self.keep_versions = keep_versions
         os.makedirs(os.path.join(path, "_commits"), exist_ok=True)
-        meta = self._load_meta()
+        meta = load_meta(path)
         if meta is not None:
             # layout properties are frozen at creation: changing the
             # bucket count or key would re-home existing rows
@@ -81,47 +188,20 @@ class BucketTable:
             self._schema = None
 
     # ---- metadata -------------------------------------------------------
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "_meta.json")
-
-    def _load_meta(self) -> dict | None:
-        try:
-            with open(self._meta_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def _save_meta(self) -> None:
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "n_buckets": self.n_buckets,
-                    "key_cols": self.key_cols,
-                    "bucket_cols": self.bucket_cols,
-                    "schema": self._schema.json(),
-                },
-                f,
-            )
-        os.replace(tmp, self._meta_path())
-
     def commits(self) -> list[int]:
-        d = os.path.join(self.path, "_commits")
-        return sorted(int(f) for f in os.listdir(d) if f.isdigit())
+        return list_markers(os.path.join(self.path, "_commits"))
 
     def _commit_buckets(self) -> dict[int, set[int] | None]:
         """Commit id → the buckets that commit wrote (recorded in the
         marker since round 4; legacy 'ok' markers → None = unknown)."""
         d = os.path.join(self.path, "_commits")
         out: dict[int, set[int] | None] = {}
-        for f in os.listdir(d):
-            if not f.isdigit():
-                continue
+        for c in list_markers(d):
             try:
-                with open(os.path.join(d, f)) as fh:
-                    out[int(f)] = set(json.load(fh)["buckets"])
+                with open(os.path.join(d, str(c))) as fh:
+                    out[c] = set(json.load(fh)["buckets"])
             except (ValueError, KeyError, TypeError):
-                out[int(f)] = None
+                out[c] = None
         return out
 
     def _check_time_travel(self, version: int, buckets: set[int] | None) -> None:
@@ -153,27 +233,13 @@ class BucketTable:
             )
 
     def _bucket_col(self):
-        return F.pmod(F.xxhash64(*[F.col(c) for c in self.bucket_cols]), F.lit(self.n_buckets)).cast("int")
+        return bucket_of(self.bucket_cols, self.n_buckets)
 
     def _bucket_versions(self, as_of: int | None = None) -> dict[int, int]:
         committed = set(self.commits())
         if as_of is not None:
             committed = {c for c in committed if c <= as_of}
-        out: dict[int, int] = {}
-        if not os.path.isdir(self.path):
-            return out
-        for d in os.listdir(self.path):
-            if not d.startswith("batch="):
-                continue
-            v = int(d.split("=", 1)[1])
-            if v not in committed:
-                continue
-            for bd in os.listdir(os.path.join(self.path, d)):
-                if bd.startswith("bucket="):
-                    b = int(bd.split("=", 1)[1])
-                    if b not in out or v > out[b]:
-                        out[b] = v
-        return out
+        return live_versions(self.path, committed)
 
     # ---- reads ----------------------------------------------------------
     def read(self, version: int | None = None, buckets: set[int] | None = None) -> DataFrame:
@@ -184,18 +250,12 @@ class BucketTable:
         pruned buckets (see ``_check_time_travel``)."""
         if version is not None:
             self._check_time_travel(version, buckets)
+        if self._schema is None:
+            raise ValueError("empty BucketTable has no schema yet")
         versions = self._bucket_versions(as_of=version)
         if buckets is not None:
             versions = {b: v for b, v in versions.items() if b in buckets}
-        paths = [
-            os.path.join(self.path, f"batch={v}", f"bucket={b}")
-            for b, v in sorted(versions.items())
-        ]
-        if not paths:
-            if self._schema is None:
-                raise ValueError("empty BucketTable has no schema yet")
-            return self.spark.createDataFrame([], self._schema)
-        return self.spark.read.schema(self._schema).parquet(*paths)
+        return read_versions(self.spark, self.path, self._schema, versions)
 
     def _touched(self, keyed: DataFrame) -> set[int]:
         return {
@@ -220,20 +280,23 @@ class BucketTable:
             # zero-file parquet read under an explicit schema.
             for b in touched:
                 os.makedirs(os.path.join(base, f"bucket={b}"), exist_ok=True)
-        self._save_meta()
+        save_meta(
+            self.path,
+            {
+                "n_buckets": self.n_buckets,
+                "key_cols": self.key_cols,
+                "bucket_cols": self.bucket_cols,
+                "schema": self._schema.json(),
+            },
+        )
         # marker LAST: readers resolve only committed versions, so a crash
         # anywhere above leaves the table at the previous commit. The
         # marker records the buckets this version wrote (read back from
         # the landed dirs — exact, including explicit empty buckets) so
         # time-travel reads can detect a pruned-away as-of view.
-        written = sorted(
-            int(bd.split("=", 1)[1])
-            for bd in os.listdir(base)
-            if bd.startswith("bucket=")
-        )
         with open(os.path.join(self.path, "_commits", str(version)), "w") as f:
-            json.dump({"buckets": written}, f)
-        self._prune()
+            json.dump({"buckets": sorted(_bucket_ids(base))}, f)
+        prune_versions(self.path, self.commits(), self.keep_versions)
 
     def upsert(self, batch: DataFrame) -> int:
         """MERGE: insert-or-replace rows by key. Touches only the buckets
@@ -281,39 +344,6 @@ class BucketTable:
         return version
 
     # ---- maintenance ----------------------------------------------------
-    def _prune(self) -> None:
-        commits = self.commits()
-        if not commits:
-            return
-        committed = set(commits)
-        newest = commits[-1]
-        per_bucket: dict[int, list[int]] = defaultdict(list)
-        for d in os.listdir(self.path):
-            if not d.startswith("batch="):
-                continue
-            v = int(d.split("=", 1)[1])
-            full = os.path.join(self.path, d)
-            if v not in committed:
-                if v < newest:
-                    shutil.rmtree(full, ignore_errors=True)
-                continue
-            for bd in os.listdir(full):
-                if bd.startswith("bucket="):
-                    per_bucket[int(bd.split("=", 1)[1])].append(v)
-        for b, vs in per_bucket.items():
-            for v in sorted(vs)[: -self.keep_versions]:
-                shutil.rmtree(
-                    os.path.join(self.path, f"batch={v}", f"bucket={b}"),
-                    ignore_errors=True,
-                )
-        for d in os.listdir(self.path):
-            if not d.startswith("batch="):
-                continue
-            v = int(d.split("=", 1)[1])
-            full = os.path.join(self.path, d)
-            if v < newest and not any(x.startswith("bucket=") for x in os.listdir(full)):
-                shutil.rmtree(full, ignore_errors=True)
-
     def compact(self) -> int:
         """Rewrite the live view as one fresh full commit.
 
@@ -431,11 +461,9 @@ def _purge(table: "BucketTable", keys: DataFrame) -> int:
     version = table.delete(keys)
     touched = table._touched(keys)
     key_set = F.broadcast(keys)
-    for d in sorted(os.listdir(table.path)):
-        if not d.startswith("batch="):
-            continue
+    for _, d in sorted(_version_dirs(table.path)):
         for b in touched:
-            bdir = os.path.join(table.path, d, f"bucket={b}")
+            bdir = os.path.join(d, f"bucket={b}")
             if not os.path.isdir(bdir) or not os.listdir(bdir):
                 continue
             cleaned = (
@@ -445,7 +473,7 @@ def _purge(table: "BucketTable", keys: DataFrame) -> int:
             )
             # tmp name must NOT start with "bucket=" — a crash that leaves
             # it behind would otherwise break the bucket-dir listing parse
-            tmp = os.path.join(table.path, d, f"_purge_tmp_{b}")
+            tmp = os.path.join(d, f"_purge_tmp_{b}")
             cleaned.write.mode("overwrite").parquet(tmp)
             # drop parquet job-commit droppings so the swapped-in dir
             # contains only data files (matching _commit's output)

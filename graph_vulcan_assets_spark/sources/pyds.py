@@ -45,6 +45,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from graph_vulcan_assets_spark.sources.bucketstore import list_markers, live_versions
+
 # --- Spark-compatible xxhash64 of a single BIGINT (seed 42) ---------------
 
 _M = (1 << 64) - 1
@@ -92,27 +94,14 @@ def _load_meta(path: str) -> dict:
 
 
 def _commits(path: str) -> list[int]:
-    d = os.path.join(path, "_commits")
-    return sorted(int(f) for f in os.listdir(d) if f.isdigit())
+    return list_markers(os.path.join(path, "_commits"))
 
 
 def _bucket_versions(path: str, as_of: int | None) -> dict[int, int]:
     committed = set(_commits(path))
     if as_of is not None:
         committed = {c for c in committed if c <= as_of}
-    out: dict[int, int] = {}
-    for d in os.listdir(path):
-        if not d.startswith("batch="):
-            continue
-        v = int(d.split("=", 1)[1])
-        if v not in committed:
-            continue
-        for bd in os.listdir(os.path.join(path, d)):
-            if bd.startswith("bucket="):
-                b = int(bd.split("=", 1)[1])
-                if b not in out or v > out[b]:
-                    out[b] = v
-    return out
+    return live_versions(path, committed)
 
 
 class _BucketPartition(InputPartition):

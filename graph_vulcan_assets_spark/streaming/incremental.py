@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graph_vulcan_assets_spark.sources.bucketstore import list_markers
 from graph_vulcan_assets_spark.tables import finite_values, micros128
 
 # Maintained aggregate: per event_type row counts and exact micro-unit
@@ -69,7 +70,7 @@ def batch_aggregate(events: DataFrame) -> DataFrame:
 def _applied_state_batches(state_dir: str) -> list[int]:
     d = os.path.join(state_dir, "_applied")
     os.makedirs(d, exist_ok=True)
-    return sorted(int(f) for f in os.listdir(d) if f.isdigit())
+    return list_markers(d)
 
 
 def _read_live_state(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:

@@ -15,34 +15,39 @@ Reference behavior re-expressed (SURVEY.md §2.9):
   the persisted state and run through plans.temporal.replay_from_events.
 
 Scale notes: incremental compute AND state I/O are O(micro-batch), not
-O(state). Each state table is hash-bucketed by its natural key
-(``pmod(xxhash64(key), N_BUCKETS)``); a micro-batch
+O(state). The state layout is ``sources/bucketstore``'s bucket-version
+store, shared with ``BucketTable``: each state table is hash-bucketed by
+its natural key (``bucketstore.bucket_of``), every write is a
+``batch=N/bucket=B`` version dir, and the live view of a table is, per
+bucket, its newest ACKNOWLEDGED version. What this module adds is one
+commit marker for all tables (``_applied/N``, written last), so a batch
+commits atomically across them. A micro-batch
 - reads ONLY the buckets its touched keys hash into,
 - seeds ONLY the state rows whose entity keys the batch touches
   (broadcast semi-join on the batch's key set), replays that bounded
   subset, unions the same-bucket remainder back (a pure columnar copy),
-- and rewrites ONLY those buckets, as ``batch=N/bucket=B`` version dirs
-  of one parquet file each (the materialized state is hash-partitioned
-  on (table, bucket) before the writes).
+- and rewrites ONLY those buckets, as version dirs of one parquet file
+  each (the materialized state is hash-partitioned on (table, bucket)
+  before the writes).
 Only the bootstrap commit (no batch acknowledged yet, a replay from
 scratch) runs under ``tuned_for_batch``'s small-batch confs; every later
 commit plans under the session's own confs (AQE on, default shuffle
 partitions), which suit its joins against state read from disk.
 Untouched buckets are never read, never rewritten — their files stay
-byte-identical across batches (test-pinned). The live view of a table is,
-per bucket, the newest ACKNOWLEDGED version; the commit marker is written
-last, so a crash mid-write leaves only ignored orphan versions and the
-redelivered batch re-applies against the previous acknowledged view
-(at-least-once → idempotent, matching kafka.go:98-104). Edges are
-bucketed by their CHILD endpoint; buckets holding edges whose PARENT
-endpoint is touched are located through ``PARENT_IDX``, an append-only
-(parent key → child bucket) pointer table bucketed by parent key — so
-the lookup is also O(batch), and nothing in the micro-batch path reads
-state proportional to total state size. On a real deployment the
-versioned buckets become a Delta/Iceberg MERGE — the seed/replay logic is
-unchanged, only the state I/O swaps. All state transforms are
-joins/windows on entity keys; state size is O(live entities), not
-O(event history).
+byte-identical across batches (test-pinned). A crash mid-write leaves
+only ignored orphan versions and the redelivered batch re-applies
+against the previous acknowledged view (at-least-once → idempotent,
+matching kafka.go:98-104). Edges are bucketed by their CHILD endpoint;
+buckets holding edges whose PARENT endpoint is touched are located
+through ``PARENT_IDX``, an append-only (parent key → child bucket)
+pointer table bucketed by parent key — so the lookup is also O(batch),
+and nothing in the micro-batch path reads state proportional to total
+state size. A state dir with acknowledged batches must carry that index
+(every writer since it was introduced does); one without it is refused.
+On a real deployment the versioned buckets become a Delta/Iceberg MERGE —
+the seed/replay logic is unchanged, only the state I/O swaps. All state
+transforms are joins/windows on entity keys; state size is O(live
+entities), not O(event history).
 
 Kafka wiring (untestable in this environment, no broker): see
 `kafka_reader()` — the standard readStream.format("kafka") with
@@ -55,7 +60,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections import defaultdict
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,6 +76,15 @@ from graph_vulcan_assets_spark.plans.temporal import (
     split_tagged_state,
     tag_union_state,
     tuned_for_batch,
+)
+from graph_vulcan_assets_spark.sources.bucketstore import (
+    bucket_of,
+    list_markers,
+    live_versions,
+    load_meta,
+    prune_versions,
+    read_versions,
+    save_meta,
 )
 
 STATE_TABLES = ("assets", "teams", "owns", "parent_of")
@@ -97,11 +110,6 @@ PARENT_IDX = "parent_idx"
 BUCKET_KEYS[PARENT_IDX] = ("parent_type", "parent_identifier")
 
 _log = get_logger("streaming.ingest")
-
-
-def bucket_of(cols: tuple[str, ...], n_buckets: int) -> Column:
-    """Deterministic bucket id for a state row: pmod(xxhash64(key), N)."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
 
 
 def kafka_reader(
@@ -171,7 +179,7 @@ class TemporalGraphStream:
         self.annotation_key = annotation_key
         self.fault = fault
         os.makedirs(os.path.join(state_dir, "_applied"), exist_ok=True)
-        meta = self._load_meta()
+        meta = load_meta(state_dir)
         if meta is not None:
             # bucket count is a storage-layout property: once written it
             # must stay fixed across restarts or rows change buckets
@@ -184,72 +192,29 @@ class TemporalGraphStream:
                 os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "32")
             )
             self._schemas = {}
+        if self._applied_batches() and PARENT_IDX not in self._schemas:
+            raise ValueError(
+                f"{state_dir} has acknowledged batches but _meta.json records "
+                f"no {PARENT_IDX} schema: it was not written by this sink; "
+                "rebuild the state by replaying the event stream"
+            )
         # complete any index compaction interrupted by a crash (the swap
         # protocol below is recoverable from every window)
         self._finish_index_compaction()
 
-    # ---- state I/O ------------------------------------------------------
-    def _meta_path(self) -> str:
-        return os.path.join(self.state_dir, "_meta.json")
-
-    def _load_meta(self) -> dict | None:
-        try:
-            with open(self._meta_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def _save_meta(self) -> None:
-        tmp = self._meta_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "n_buckets": self.n_buckets,
-                    "schemas": {t: s.json() for t, s in self._schemas.items()},
-                },
-                f,
-            )
-        os.replace(tmp, self._meta_path())
-
+    # ---- state I/O (layout: sources/bucketstore) --------------------------
     def _applied_batches(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_applied")
-        return sorted(int(f) for f in os.listdir(d) if f.isdigit())
-
-    def _bucket_versions(self, table: str) -> dict[int, int]:
-        """bucket id → newest ACKNOWLEDGED batch that wrote it. Orphan
-        versions from crashed (unacknowledged) attempts are invisible."""
-        base = os.path.join(self.state_dir, table)
-        acked = set(self._applied_batches())
-        out: dict[int, int] = {}
-        if not os.path.isdir(base):
-            return out
-        for d in os.listdir(base):
-            if not d.startswith("batch="):
-                continue
-            bid = int(d.split("=", 1)[1])
-            if bid not in acked:
-                continue
-            for bd in os.listdir(os.path.join(base, d)):
-                if bd.startswith("bucket="):
-                    b = int(bd.split("=", 1)[1])
-                    if b not in out or bid > out[b]:
-                        out[b] = bid
-        return out
+        return list_markers(os.path.join(self.state_dir, "_applied"))
 
     def _read_buckets(self, table: str, bucket_ids: set[int] | None) -> DataFrame:
         """Assemble a state table from its live bucket versions; with
         ``bucket_ids`` given, read ONLY those buckets (the O(batch) read
         path — untouched buckets are never opened)."""
-        versions = self._bucket_versions(table)
+        base = os.path.join(self.state_dir, table)
+        versions = live_versions(base, set(self._applied_batches()))
         if bucket_ids is not None:
             versions = {b: v for b, v in versions.items() if b in bucket_ids}
-        paths = [
-            os.path.join(self.state_dir, table, f"batch={v}", f"bucket={b}")
-            for b, v in sorted(versions.items())
-        ]
-        if not paths:
-            return self.spark.createDataFrame([], self._schemas[table])
-        return self.spark.read.schema(self._schemas[table]).parquet(*paths)
+        return read_versions(self.spark, base, self._schemas[table], versions)
 
     def read_state(self) -> dict[str, DataFrame] | None:
         if not self._applied_batches():
@@ -324,21 +289,19 @@ class TemporalGraphStream:
                 ).distinct().collect()
             }
             merged = self._read_buckets(PARENT_IDX, idx_buckets).unionByName(new_pairs)
-        elif self._applied_batches():
-            # state predates the index (pre-index layout): one-time
-            # backfill from the full live edge set, merged with this
-            # batch's content
-            merged = self._index_pairs(
-                self._read_buckets("parent_of", None)
-            ).unionByName(new_pairs)
-            self._schemas[PARENT_IDX] = new_pairs.schema
         else:
             merged = new_pairs
             self._schemas[PARENT_IDX] = new_pairs.schema
         self._write_index(
             merged, os.path.join(self.state_dir, PARENT_IDX, f"batch={batch_id}")
         )
-        self._save_meta()
+        save_meta(
+            self.state_dir,
+            {
+                "n_buckets": self.n_buckets,
+                "schemas": {t: sch.json() for t, sch in self._schemas.items()},
+            },
+        )
         # marker written last: a crash mid-write leaves the batch
         # unacknowledged — its bucket versions are orphans the read side
         # ignores — and it is re-applied on restart against the previous
@@ -346,57 +309,13 @@ class TemporalGraphStream:
         # kafka.go:98-104's commit-after-process)
         with open(os.path.join(self.state_dir, "_applied", str(batch_id)), "w") as f:
             f.write("ok")
-        self._prune_snapshots()
-
-    def _prune_snapshots(self) -> None:
-        """Remove superseded bucket versions: per bucket, keep the newest
-        TWO acknowledged versions. Why two: a crash between batch N's
-        state write and its marker leaves N unacknowledged, and the
-        redelivered batch must still find every bucket's previous
-        acknowledged version intact to re-apply against. Older versions
-        (and crashed-attempt orphans superseded by a newer acknowledged
-        batch) are dead weight — without pruning, storage grows
-        O(batches × state), the one unbounded resource in the design."""
+        # per bucket, keep the newest TWO acknowledged versions: a crash
+        # between a batch's state write and its marker leaves it
+        # unacknowledged, and the redelivered batch must still find every
+        # bucket's previous acknowledged version to re-apply against
         applied = self._applied_batches()
-        if not applied:
-            return
-        acked = set(applied)
-        newest = applied[-1]
         for t in (*STATE_TABLES, PARENT_IDX):
-            base = os.path.join(self.state_dir, t)
-            if not os.path.isdir(base):
-                continue
-            per_bucket: dict[int, list[int]] = defaultdict(list)
-            for d in os.listdir(base):
-                if not d.startswith("batch="):
-                    continue
-                bid = int(d.split("=", 1)[1])
-                if bid not in acked:
-                    if bid < newest:
-                        # crashed attempt superseded by a newer ack
-                        _log.debug("pruning orphan snapshot %s/%s", t, d)
-                        shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-                    continue
-                for bd in os.listdir(os.path.join(base, d)):
-                    if bd.startswith("bucket="):
-                        per_bucket[int(bd.split("=", 1)[1])].append(bid)
-            for b, bids in per_bucket.items():
-                for bid in sorted(bids)[:-2]:
-                    _log.debug("pruning superseded %s/batch=%d/bucket=%d", t, bid, b)
-                    shutil.rmtree(
-                        os.path.join(base, f"batch={bid}", f"bucket={b}"),
-                        ignore_errors=True,
-                    )
-            # drop acknowledged batch dirs left with no bucket versions
-            for d in os.listdir(base):
-                if not d.startswith("batch="):
-                    continue
-                bid = int(d.split("=", 1)[1])
-                full = os.path.join(base, d)
-                if bid < newest and not any(
-                    x.startswith("bucket=") for x in os.listdir(full)
-                ):
-                    shutil.rmtree(full, ignore_errors=True)
+            prune_versions(os.path.join(self.state_dir, t), applied, keep=2)
 
     # ---- index compaction (maintenance) ---------------------------------
     def _index_staging_dir(self) -> str:
@@ -440,7 +359,7 @@ class TemporalGraphStream:
         is never partial.
         """
         self._finish_index_compaction()
-        if PARENT_IDX not in self._schemas or not self._applied_batches():
+        if not self._applied_batches():
             return
         live = self._read_buckets("parent_of", None).where(
             F.col("expiration") == F.lit(UNEXPIRED).cast("timestamp")
@@ -488,20 +407,19 @@ class TemporalGraphStream:
         child-side touches map directly; parent-side touches resolve
         through PARENT_IDX — a touched parent's index bucket is its asset
         bucket (same key, same hash), so the lookup reads O(batch) index
-        buckets, and the pointed-to child buckets join the edge set. With
-        no index (state written by the pre-index layout) the legacy
-        key-only scan of parent_of is the fallback; the next write
-        backfills the index. The collects are bounded by n_buckets —
-        scalar-sized; the asset and team buckets share one.
+        buckets, and the pointed-to child buckets join the edge set. The
+        hash is ``bucketstore.bucket_of`` on the same key columns the
+        state tables are bucketed by. The collects are bounded by
+        n_buckets — scalar-sized; the asset and team buckets share one.
         """
         nb = self.n_buckets
         key_buckets = touched_assets.select(
             F.lit(True).alias("is_asset"),
-            F.pmod(F.xxhash64("asset_type", "identifier"), F.lit(nb)).cast("int").alias("b"),
+            bucket_of(("asset_type", "identifier"), nb).alias("b"),
         ).unionByName(
             touched_teams.select(
                 F.lit(False).alias("is_asset"),
-                F.pmod(F.xxhash64("team_id"), F.lit(nb)).cast("int").alias("b"),
+                bucket_of(("team_id",), nb).alias("b"),
             )
         )
         ab: set[int] = set()
@@ -515,30 +433,14 @@ class TemporalGraphStream:
                 F.col("identifier").alias("parent_identifier"),
             )
         )
-        if PARENT_IDX in self._schemas:
-            idx = self._read_buckets(PARENT_IDX, ab)
-            eb |= {
-                r[0]
-                for r in idx.join(
-                    p_keys, ["parent_type", "parent_identifier"], "left_semi"
-                )
-                .select("child_bucket")
-                .distinct()
-                .collect()
-            }
-        else:
-            edges = self._read_buckets("parent_of", None).select(
-                "child_type", "child_identifier", "parent_type", "parent_identifier"
-            )
-            eb |= {
-                r[0]
-                for r in edges.join(
-                    p_keys, ["parent_type", "parent_identifier"], "left_semi"
-                )
-                .select(bucket_of(BUCKET_KEYS["parent_of"], nb))
-                .distinct()
-                .collect()
-            }
+        idx = self._read_buckets(PARENT_IDX, ab)
+        eb |= {
+            r[0]
+            for r in idx.join(p_keys, ["parent_type", "parent_identifier"], "left_semi")
+            .select("child_bucket")
+            .distinct()
+            .collect()
+        }
         return {"assets": ab, "teams": tb, "owns": ab, "parent_of": eb}
 
     def _apply_batch_inner(self, raw_batch: DataFrame, batch_id: int, bootstrap: bool) -> None:

@@ -42,7 +42,7 @@ def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
     (NaN/Inf/1e308) drops the whole row via :func:`tables.finite_values`,
     so it is excluded from ``n`` as well — same as the batch windowed
     aggregates (q_time_tumbling) and incremental.batch_aggregate. The
-    SESSIONIZERS (stateful.py / stateful_tws.py) use the other contract:
+    SESSIONIZER (stateful.py) uses the other contract:
     COUNT-AS-ZERO (the event still counts, its value contributes 0) —
     session membership is positional, so dropping the row would also
     move session boundaries. The micros cast would die on a corrupt

@@ -7,7 +7,6 @@ column pruning and partition pruning apply automatically downstream.
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -324,7 +323,8 @@ def input_size_bytes(*dfs: DataFrame) -> int:
     """Catalyst's size estimate of the given frames' optimized plans,
     summed. For parquet scans this is file-size metadata (×
     ``fileCompressionFactor``) — data-proportional, costs no job. The
-    scale signal :func:`tuned_for_input` derives partition counts from."""
+    scale signal ``plans.temporal.tuned_for_batch(n_bytes=...)`` derives
+    partition counts from."""
     total = 0
     for df in dfs:
         total += int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -336,42 +336,13 @@ def scaled_shuffle_partitions(
 ) -> int:
     """Initial shuffle-partition count proportional to input bytes,
     floored at 4 and saturating at the session default — the bytes twin
-    of plans.temporal.batch_shuffle_partitions (same rationale: AQE
+    of plans.temporal.batch_shuffle_partitions, used by
+    ``tuned_for_batch(n_bytes=...)`` (same rationale: AQE
     coalesces reducers at runtime, but the map side and the scheduler
     still pay per INITIAL partition, and for a kB-scale input that fixed
     cost dominates; at cluster scale the formula saturates and the
     session default + AQE take over)."""
     return max(4, min(default, n_bytes // bytes_per_partition))
-
-
-@contextmanager
-def tuned_for_input(spark: SparkSession, n_bytes: int):
-    """Run a block of small-input jobs (e.g. an iterate-over-a-bounded-
-    model-table training loop) under input-scaled initial shuffle
-    partitions, restoring the session confs afterwards. Mirrors
-    plans.temporal.tuned_for_batch (VERDICT r12 praised that form as a
-    real plan property): AQE is disabled only when the input is small
-    enough that the partition count dropped below the session default —
-    AQE's per-query-stage re-planning jobs are pure overhead once the
-    shuffle is already right-sized; large inputs keep AQE and the
-    session default untouched.
-
-    The confs are session-global: the block assumes nothing else runs
-    jobs on the same SparkSession meanwhile (a concurrent query would
-    plan under the scaled confs). Both are restored on exit, also when
-    the block raises."""
-    conf = spark.conf
-    prev_shuffle = conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    parts = scaled_shuffle_partitions(n_bytes, int(prev_shuffle))
-    conf.set("spark.sql.shuffle.partitions", str(parts))
-    if parts < int(prev_shuffle):
-        conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
