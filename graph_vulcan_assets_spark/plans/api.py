@@ -25,8 +25,11 @@ the traversals are id-keyed (`Assets` returns ids, inventory.go:71-78;
 edges carry parent_id/child_id, inventory.go:89-96). The engine derives
 DETERMINISTIC surrogate ids — ``xxhash64`` over a per-entity-kind salt and
 the natural key — so ids are stable across replays, reproducible on any
-executor without coordination (no sequence generator, no shuffle), and
-id-keyed lookups remain partition-prunable equality filters. `assets()` /
+executor without coordination (no sequence generator, no shuffle). An
+id-keyed lookup is an equality filter on that computed hash, so it prunes
+no files; neither does a natural-key lookup over ``streaming.ingest``'s
+bucketed state, whose read side does not see the bucket column, so both
+scan every live file of the table. `assets()` /
 `teams()` surface `id`; edge views surface `parent_id`/`child_id`/
 `asset_id`/`team_ref`; the traversals accept either the natural key or
 ``asset_id=``.

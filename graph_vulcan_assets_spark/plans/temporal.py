@@ -391,13 +391,20 @@ def derive_guard_frames(ev: dict[str, DataFrame]) -> dict[str, DataFrame]:
     }
 
 
-def replay_from_events(ev: dict[str, DataFrame]) -> dict[str, DataFrame]:
+def replay_from_events(
+    ev: dict[str, DataFrame], cached: list[DataFrame] | None = None
+) -> dict[str, DataFrame]:
     """Replay primitive event frames into final state tables.
 
     Returns {"assets", "teams", "owns", "parent_of"} DataFrames with the
     schemas of FIXTURES.md §2 (surrogate ids omitted; natural keys are the
     identity, matching the reference's order-insensitive golden comparison
     that ignores ids, main_test.go:374-392).
+
+    The replay ``.cache()``s its three multi-consumer frames. With
+    ``cached`` given, they are appended to it in caching order, so a
+    caller that materializes the result can unpersist them (dependents
+    first, i.e. in reverse); otherwise they stay in the session's cache.
     """
     asset_refresh = ev["asset_refresh"]
     team_events = ev["team_events"]
@@ -469,6 +476,8 @@ def replay_from_events(ev: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
     # ---- parent_of edges (child asset → AWSAccount parent)
     edge_activate = edge_activate_raw.withColumn("kind", F.lit("activate")).cache()
+    if cached is not None:
+        cached += [pair_timeline, guarded_expire, edge_activate]
     edge_created = edge_activate.groupBy(
         "child_type", "child_identifier", "parent_type", "parent_identifier"
     ).agg(
@@ -598,14 +607,16 @@ for _cols in STATE_COLUMNS.values():
             _SUPERSET.append(_c)
 
 
-def tag_union_state(state: dict[str, DataFrame]) -> DataFrame:
+def tag_union_state(state: dict[str, DataFrame], extra: tuple[str, ...] = ()) -> DataFrame:
     """Fuse the four state tables into ONE null-padded, tagged DataFrame.
 
     Materializing state via this union runs a single Spark job (one
     scheduling pass, shared cached frames computed once) instead of four —
     the four separate writes were pure fixed-cost overhead at small batch
     sizes. `split_tagged_state` recovers the per-table views with cheap
-    filters over the materialized result.
+    filters over the materialized result. ``extra`` names columns every
+    table carries beyond its own (e.g. a per-row flag); they ride along
+    after the superset and `split_tagged_state` drops them.
     """
     parts = []
     for table, cols in STATE_COLUMNS.items():
@@ -617,6 +628,7 @@ def tag_union_state(state: dict[str, DataFrame]) -> DataFrame:
                     (F.col(n) if n in have else F.lit(None)).cast(t).alias(n)
                     for n, t in _SUPERSET
                 ],
+                *extra,
             )
         )
     out = parts[0]
@@ -674,14 +686,16 @@ def tuned_for_batch(spark, n_rows: int | None = None, *, n_bytes: int | None = N
       Large batches keep AQE (partitions saturate at the session default
       and runtime re-planning pays again).
 
-    It suits a replay from scratch (no state to seed), which is why
-    ``streaming.ingest`` applies it to the bootstrap commit only: there
-    an AQE-on run measured 25–30 s against 19–22 s for 10k events on
-    4 vCPUs. An incremental commit joins the batch against state read
-    from disk: with AQE off and 4 partitions its split plan launched ~70
-    one-stage broadcast jobs, and a 2k-event commit into ~3k assets took
-    38 s against 23 s under the session's own confs (AQE on, default
-    partitions), same host.
+    It suits a replay over inputs that are already materialized: the
+    bootstrap commit replays the batch from scratch (there an AQE-on run
+    measured 25–30 s against 19–22 s for 10k events on 4 vCPUs), and an
+    incremental commit replays the batch plus the seeded state rows, both
+    local checkpoints by then, so ``streaming.ingest`` sizes the block by
+    their row count. The block must not cover the plan that splits state
+    read from disk by the touched keys: planned inside it, with AQE off,
+    those joins launched ~70 one-stage broadcast jobs, and a 2k-event
+    commit into ~3k assets took 38 s against 23 s under the session's own
+    confs, same host.
 
     The confs are session-global: the block assumes nothing else runs
     jobs on the same SparkSession meanwhile (a concurrent query would

@@ -23,27 +23,31 @@ bucket, its newest ACKNOWLEDGED version. What this module adds is one
 commit marker for all tables (``_applied/N``, written last), so a batch
 commits atomically across them. A micro-batch
 - reads ONLY the buckets its touched keys hash into,
-- seeds ONLY the state rows whose entity keys the batch touches
-  (broadcast semi-join on the batch's key set), replays that bounded
-  subset, unions the same-bucket remainder back (a pure columnar copy),
+- seeds ONLY the state rows whose entity keys the batch touches (each row
+  of the touched buckets is flagged by a broadcast left join on the
+  batch's key set, and the flagged rows are materialized as one local
+  checkpoint), replays that bounded subset, unions the same-bucket
+  remainder back (a pure columnar copy),
 - and rewrites ONLY those buckets, as version dirs of one parquet file
   each (the materialized state is hash-partitioned on (table, bucket)
   before the writes).
-Only the bootstrap commit (no batch acknowledged yet, a replay from
-scratch) runs under ``tuned_for_batch``'s small-batch confs; every later
-commit plans under the session's own confs (AQE on, default shuffle
-partitions), which suit its joins against state read from disk.
-Untouched buckets are never read, never rewritten — their files stay
-byte-identical across batches (test-pinned). A crash mid-write leaves
-only ignored orphan versions and the redelivered batch re-applies
-against the previous acknowledged view (at-least-once → idempotent,
-matching kafka.go:98-104). Edges are bucketed by their CHILD endpoint;
-buckets holding edges whose PARENT endpoint is touched are located
-through ``PARENT_IDX``, an append-only (parent key → child bucket)
-pointer table bucketed by parent key — so the lookup is also O(batch),
-and nothing in the micro-batch path reads state proportional to total
-state size. A state dir with acknowledged batches must carry that index
-(every writer since it was introduced does); one without it is refused.
+The decode, the touched-key lookups and the split run under the
+session's own confs. The replay runs under ``tuned_for_batch``'s
+small-batch confs, sized by what it replays: the whole batch for the
+bootstrap commit (no batch acknowledged yet), the decoded batch plus the
+seeded rows for a later commit, whose inputs are checkpoints by then.
+The state write runs under the session's confs again. Untouched buckets
+are never read, never rewritten — their files stay byte-identical across
+batches (test-pinned). A crash mid-write leaves only ignored orphan
+versions and the redelivered batch re-applies against the previous
+acknowledged view (at-least-once → idempotent, matching
+kafka.go:98-104). Edges are bucketed by their CHILD endpoint; buckets
+holding edges whose PARENT endpoint is touched are located through
+``PARENT_IDX``, an append-only (parent key → child bucket) pointer table
+bucketed by parent key — so the lookup is also O(batch), and nothing in
+the micro-batch path reads state proportional to total state size. A
+state dir with acknowledged batches must carry that index (every writer
+since it was introduced does); one without it is refused.
 On a real deployment the versioned buckets become a Delta/Iceberg MERGE —
 the seed/replay logic is unchanged, only the state I/O swaps. All state
 transforms are joins/windows on entity keys; state size is O(live
@@ -386,18 +390,21 @@ class TemporalGraphStream:
             return
 
         if applied:
-            # incremental commit: runs under the session's own confs. Its
-            # plan joins the batch's keys against state read from disk,
-            # which AQE re-plans far better than the small-batch confs do
-            # (measured in temporal.tuned_for_batch)
-            self._apply_batch_inner(raw_batch, batch_id, bootstrap=False)
+            # incremental commit: its inputs are materialized under the
+            # session's confs, then replayed under batch-scaled ones
+            self._apply_incremental(raw_batch, batch_id)
             return
         # bootstrap commit, a replay from scratch: scale initial shuffle
         # partitions to the batch size and drop AQE for small batches —
         # the replay is many small shuffles, and per-partition + per-stage
         # fixed cost dominates (temporal.tuned_for_batch)
         with tuned_for_batch(self.spark, raw_batch.count()):
-            self._apply_batch_inner(raw_batch, batch_id, bootstrap=True)
+            # a small batch's map side narrows to the batch-scaled
+            # partition count; a large one keeps its scan parallelism
+            ev = events_from_decoded(coalesce_small_batch(self._decode(raw_batch)))
+            cached: list[DataFrame] = []
+            new_state = self._materialize(replay_from_events(ev, cached), cached)
+            self._commit(new_state, batch_id)
 
     def _touched_buckets(self, touched_assets: DataFrame, touched_teams: DataFrame) -> dict[str, set[int]]:
         """Bucket ids each state table must read+rewrite for this batch.
@@ -443,51 +450,77 @@ class TemporalGraphStream:
         }
         return {"assets": ab, "teams": tb, "owns": ab, "parent_of": eb}
 
-    def _apply_batch_inner(self, raw_batch: DataFrame, batch_id: int, bootstrap: bool) -> None:
+    def _decode(self, raw_batch: DataFrame) -> DataFrame:
         if self.annotation_key is not None:
-            decoded = decode_events(raw_batch, self.annotation_key)
-        else:
-            decoded = decode_events(raw_batch)
-        # a small bootstrap batch's map side narrows to the batch-scaled
-        # partition count; any other input keeps its scan parallelism
-        ev = events_from_decoded(coalesce_small_batch(decoded))
-        if bootstrap:
-            new_state = replay_from_events(ev)
-        else:
-            # O(batch) incremental step: read ONLY the buckets this
-            # micro-batch's keys hash into, seed ONLY the state rows whose
-            # entity keys the batch touches; same-bucket bystander rows
-            # pass through into the rewritten bucket version (a straight
-            # columnar copy), and every other bucket is neither read nor
-            # written.
-            touched_assets, touched_teams = touched_keys(ev)
-            touched_assets = touched_assets.localCheckpoint(eager=True)
-            touched_teams = touched_teams.localCheckpoint(eager=True)
-            buckets = self._touched_buckets(touched_assets, touched_teams)
-            state = {t: self._read_buckets(t, buckets[t]) for t in STATE_TABLES}
-            seeded, untouched = split_state_by_touched(
-                state, touched_assets, touched_teams
+            return decode_events(raw_batch, self.annotation_key)
+        return decode_events(raw_batch)
+
+    def _apply_incremental(self, raw_batch: DataFrame, batch_id: int) -> None:
+        """O(batch) incremental commit: read ONLY the buckets this
+        micro-batch's keys hash into, seed ONLY the state rows whose
+        entity keys the batch touches; same-bucket bystander rows pass
+        through into the rewritten bucket version (a straight columnar
+        copy), and every other bucket is neither read nor written.
+
+        Everything the replay consumes is materialized first, under the
+        session's own confs: the decoded batch (parsed once; the touched
+        keys and the replay events both derive from it) and the split of
+        the touched buckets (`split_state_by_touched`, one checkpoint).
+        The replay then plans over those blocks alone, so it runs under
+        ``tuned_for_batch`` sized by its input (decoded plus seeded rows),
+        as the bootstrap's does; a small batch that touches a hot parent
+        with many edges gets the partitions its seeds need."""
+        decoded = self._decode(raw_batch).localCheckpoint(eager=True)
+        touched_assets, touched_teams = touched_keys(events_from_decoded(decoded))
+        touched_assets = touched_assets.localCheckpoint(eager=True)
+        touched_teams = touched_teams.localCheckpoint(eager=True)
+        buckets = self._touched_buckets(touched_assets, touched_teams)
+        state = {t: self._read_buckets(t, buckets[t]) for t in STATE_TABLES}
+        seeded, untouched = split_state_by_touched(state, touched_assets, touched_teams)
+        # the replay's input rows, counted in one query over the blocks
+        n_rows = decoded.select().union(tag_union_state(seeded).select()).count()
+        with tuned_for_batch(self.spark, n_rows):
+            # the blocks' map side narrows to the batch-scaled partition
+            # count, as the bootstrap's input does
+            ev = events_from_decoded(coalesce_small_batch(decoded))
+            seeds = seed_events({t: coalesce_small_batch(df) for t, df in seeded.items()})
+            cached: list[DataFrame] = []
+            replayed = replay_from_events(
+                {k: seeds[k].unionByName(ev[k]) for k in ev}, cached
             )
-            seeds = seed_events(seeded)
-            ev = {k: seeds[k].unionByName(ev[k]) for k in ev}
-            replayed = replay_from_events(ev)
-            new_state = {
-                t: untouched[t].select(replayed[t].columns).unionByName(replayed[t])
-                for t in STATE_TABLES
-            }
-        # fused eager local checkpoint: the four state tables materialize
-        # as ONE tagged-union job (shared replay frames computed once, one
-        # scheduling pass instead of four) and the lineage is cut so plans
-        # don't grow across batches; the per-table writes below are cheap
-        # filters over the checkpointed blocks. Hash-partitioning the
-        # union on (table, bucket) first puts each bucket of each table in
-        # ONE partition, so every bucket version is written as one file
-        # without a shuffle per write.
-        tagged = tag_union_state(new_state)
-        tagged = tagged.repartition(
-            F.col("__table"), self._tagged_bucket()
-        ).localCheckpoint(eager=True)
-        new_state = split_tagged_state(tagged)
+            new_state = self._materialize(
+                {
+                    t: untouched[t].select(replayed[t].columns).unionByName(replayed[t])
+                    for t in STATE_TABLES
+                },
+                cached,
+            )
+        self._commit(new_state, batch_id)
+
+    def _materialize(
+        self, state: dict[str, DataFrame], cached: list[DataFrame]
+    ) -> dict[str, DataFrame]:
+        """Fused eager local checkpoint of a commit's new state: the four
+        tables materialize as ONE tagged-union job (shared replay frames
+        computed once, one scheduling pass instead of four) and the
+        lineage is cut so plans don't grow across batches; the per-table
+        writes are cheap filters over the checkpointed blocks.
+        Hash-partitioning the union on (table, bucket) first puts each
+        bucket of each table in ONE partition, so every bucket version is
+        written as one file without a shuffle per write. Once the blocks
+        hold the state, the frames the replay cached (``cached``) are
+        released, dependents first: left cached, every micro-batch would
+        add entries to the session's cache."""
+        tagged = (
+            tag_union_state(state)
+            .repartition(F.col("__table"), self._tagged_bucket())
+            .localCheckpoint(eager=True)
+        )
+        for df in reversed(cached):
+            df.unpersist()
+        return split_tagged_state(tagged)
+
+    def _commit(self, new_state: dict[str, DataFrame], batch_id: int) -> None:
         if self.fault is not None:
             self.fault(batch_id)  # crash injection point (pre-commit)
         self._write_state(new_state, batch_id)
@@ -571,48 +604,58 @@ def split_state_by_touched(
     touched_teams: DataFrame,
 ) -> tuple[dict[str, DataFrame], dict[str, DataFrame]]:
     """Partition every state table into (touched → seed+replay, untouched
-    → pass through). The touched key set is one micro-batch's worth of
-    keys, so it is broadcast: the split costs one broadcast-hash probe per
-    state row, never a shuffle of the state."""
-    ta = F.broadcast(touched_assets)
-    tt = F.broadcast(touched_teams)
+    → pass through).
 
-    def split(df: DataFrame, keys: DataFrame, on: list[str]) -> tuple[DataFrame, DataFrame]:
-        return df.join(keys, on, "left_semi"), df.join(keys, on, "left_anti")
+    Every row is flagged in one pass: one broadcast left join per key side
+    against the micro-batch's (distinct) touched keys, so a row meets at
+    most one key per side and is neither duplicated nor dropped; an edge
+    is touched when EITHER endpoint is, two joins OR'd, never an OR-join.
+    The four flagged tables are materialized as ONE tagged local
+    checkpoint (`tag_union_state`, one job plus its broadcasts), and both
+    halves are filters over it: what plans on top of them — the seeded
+    replay — sees a scan of checkpointed blocks, not the joins against
+    state read from disk."""
+    seed = "__seed"
 
-    a_keys = ta.select(F.col("asset_type").alias("type"), "identifier")
-    assets_t, assets_u = split(state["assets"], a_keys, ["type", "identifier"])
+    def flag(df: DataFrame, keys: DataFrame, on: list[str], name: str = seed) -> DataFrame:
+        return df.join(F.broadcast(keys.withColumn(name, F.lit(True))), on, "left")
 
-    t_keys = tt.select(F.col("team_id").alias("identifier"))
-    teams_t, teams_u = split(state["teams"], t_keys, ["identifier"])
+    a_keys = touched_assets.select(F.col("asset_type").alias("type"), "identifier")
+    assets = flag(state["assets"], a_keys, ["type", "identifier"])
 
-    o_keys = ta.select(
+    t_keys = touched_teams.select(F.col("team_id").alias("identifier"))
+    teams = flag(state["teams"], t_keys, ["identifier"])
+
+    o_keys = touched_assets.select(
         F.col("asset_type").alias("type"),
         F.col("identifier").alias("asset_identifier"),
     )
-    owns_t, owns_u = split(state["owns"], o_keys, ["type", "asset_identifier"])
+    owns = flag(state["owns"], o_keys, ["type", "asset_identifier"])
 
-    # edge is touched when EITHER endpoint is a touched asset; the OR is
-    # two consecutive broadcast semi/anti splits, never an OR-join
-    c_keys = ta.select(
+    c_keys = touched_assets.select(
         F.col("asset_type").alias("child_type"),
         F.col("identifier").alias("child_identifier"),
     )
-    p_keys = ta.select(
+    p_keys = touched_assets.select(
         F.col("asset_type").alias("parent_type"),
         F.col("identifier").alias("parent_identifier"),
     )
-    child_hit, child_miss = split(
-        state["parent_of"], c_keys, ["child_type", "child_identifier"]
-    )
-    parent_hit, edges_u = split(
-        child_miss, p_keys, ["parent_type", "parent_identifier"]
-    )
-    edges_t = child_hit.unionByName(parent_hit)
+    edges = flag(
+        flag(state["parent_of"], c_keys, ["child_type", "child_identifier"], "__child"),
+        p_keys,
+        ["parent_type", "parent_identifier"],
+        "__parent",
+    ).withColumn(seed, F.col("__child") | F.col("__parent"))
 
+    flagged = {"assets": assets, "teams": teams, "owns": owns, "parent_of": edges}
+    tagged = tag_union_state(
+        # a row no key matched carries a NULL flag
+        {t: df.withColumn(seed, F.coalesce(seed, F.lit(False))) for t, df in flagged.items()},
+        extra=(seed,),
+    ).localCheckpoint(eager=True)
     return (
-        {"assets": assets_t, "teams": teams_t, "owns": owns_t, "parent_of": edges_t},
-        {"assets": assets_u, "teams": teams_u, "owns": owns_u, "parent_of": edges_u},
+        split_tagged_state(tagged.where(F.col(seed))),
+        split_tagged_state(tagged.where(~F.col(seed))),
     )
 
 

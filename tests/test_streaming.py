@@ -626,3 +626,131 @@ def test_confs_restored_after_failed_bootstrap(spark, tmp_path):
     with pytest.raises(Exception, match="injected crash"):
         _commit_confs(spark, tmp_path, fail_on=0)
     assert _confs(spark) == session
+
+
+def test_split_by_touched_partitions_every_table(spark, tmp_path):
+    """The touched-key split flags every row of the state exactly once:
+    per table, seeded ⊎ untouched is the state as a multiset (the flagging
+    joins neither duplicate nor drop a row), and an edge whose only
+    touched endpoint is its PARENT (an AWSAccount tombstone) is seeded."""
+    import datetime
+    from collections import Counter
+
+    from graph_vulcan_assets_spark.plans.temporal import (
+        RAW_SCHEMA as RS,
+        decode_events,
+        events_from_decoded,
+    )
+    from graph_vulcan_assets_spark.streaming.ingest import (
+        STATE_TABLES,
+        split_state_by_touched,
+        touched_keys,
+    )
+
+    msgs = fixtures.golden_messages()
+    stream = TemporalGraphStream(spark, str(tmp_path / "state"))
+    stream.apply_batch(spark.createDataFrame(msgs, schema=RS), 0)
+    state = stream.read_state()
+
+    account = "arn:aws:iam::000000000002:root"  # h2's parent, never a child
+    tomb = fixtures.tombstone_msg(
+        max(m["seq"] for m in msgs) + 1, 0, "t1", "AWSAccount", account
+    )
+    tomb["ts"] = max(m["ts"] for m in msgs) + datetime.timedelta(minutes=5)
+    batch = spark.createDataFrame([tomb], schema=RS)
+    ta, tt = touched_keys(events_from_decoded(decode_events(batch)))
+    seeded, untouched = split_state_by_touched(state, ta, tt)
+
+    def rows(df, cols):
+        return Counter(tuple(r[c] for c in cols) for r in df.collect())
+
+    for t in STATE_TABLES:
+        cols = state[t].columns
+        assert rows(seeded[t], cols) + rows(untouched[t], cols) == rows(state[t], cols), t
+    assert untouched["parent_of"].count() > 0  # the split is not trivial
+
+    touched = {(r["asset_type"], r["identifier"]) for r in ta.collect()}
+    assert touched == {("AWSAccount", account)}
+    edge = ("Hostname", "h2.example.com", "AWSAccount", account)
+    assert edge in rows(
+        seeded["parent_of"],
+        ["child_type", "child_identifier", "parent_type", "parent_identifier"],
+    )
+    # the parent-side seed drives the cascade through the incremental path
+    stream.apply_batch(batch, 1)
+    assert read_final_state(spark, stream) == state_from_interpreter(msgs + [tomb])
+
+
+def _persistent_rdds(spark) -> int:
+    """Persistent RDDs of the context once every unreferenced one is
+    dropped. Each round collects the Python heap and waits for py4j's
+    finalizer thread (it wakes every second) to release the JVM objects
+    the dropped proxies held, including the map the previous round's
+    count returned, which pins every RDD it lists; then it collects the
+    JVM heap and lets the context cleaner unpersist what became
+    unreachable. Rounds repeat until the count settles."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+    last = None
+    for _ in range(10):
+        gc.collect()
+        time.sleep(1.1)
+        sc._jvm.System.gc()
+        time.sleep(0.3)
+        n = sc._jsc.sc().getPersistentRDDs().size()
+        if n == last:
+            return n
+        last = n
+    return last
+
+
+def test_commits_release_replay_caches(spark, tmp_path):
+    """A commit releases what the replay cached once its state is
+    checkpointed: the persistent RDDs of the session do not grow with
+    the number of micro-batches applied."""
+    from graph_vulcan_assets_spark.plans.temporal import RAW_SCHEMA as RS
+
+    msgs = fixtures.golden_messages()
+    stream = TemporalGraphStream(spark, str(tmp_path / "state"))
+    after = {}
+    for bid, chunk in enumerate([msgs[:4], msgs[4:8], msgs[8:12], msgs[12:]]):
+        stream.apply_batch(spark.createDataFrame(chunk, schema=RS), bid)
+        if bid in (1, 3):
+            after[bid] = _persistent_rdds(spark)
+    assert after[3] <= after[1], after
+
+
+def test_incremental_replay_sized_by_seeded_rows(spark, tmp_path, monkeypatch):
+    """An incremental commit's replay is tuned for its whole input, the
+    decoded batch plus the seeded state rows: a one-event batch that
+    tombstones a parent of many edges is not sized as a one-row batch."""
+    from graph_vulcan_assets_spark.plans.temporal import RAW_SCHEMA as RS
+    from graph_vulcan_assets_spark.streaming import ingest
+
+    sized = []
+    real = ingest.tuned_for_batch
+
+    def recording(spark_, n_rows):
+        sized.append(n_rows)
+        return real(spark_, n_rows)
+
+    monkeypatch.setattr(ingest, "tuned_for_batch", recording)
+    account = "000000000007"
+    n_children = 200
+    msgs = [
+        fixtures.refresh_msg(i, i, "t1", "Team One", "Hostname", f"h{i}.example.com",
+                             [(fixtures.AWS_ANNOTATION_KEY, account)])
+        for i in range(1, n_children + 1)
+    ]
+    tomb = fixtures.tombstone_msg(
+        n_children + 1, n_children + 1, "t1", "AWSAccount", f"arn:aws:iam::{account}:root"
+    )
+    stream = TemporalGraphStream(spark, str(tmp_path / "state"))
+    stream.apply_batch(spark.createDataFrame(msgs, schema=RS), 0)
+    stream.apply_batch(spark.createDataFrame([tomb], schema=RS), 1)
+    # bootstrap: the batch; incremental: 1 event + the account, its team
+    # and its n_children edges
+    assert sized == [n_children, 1 + 1 + 1 + n_children]
+    assert read_final_state(spark, stream) == state_from_interpreter(msgs + [tomb])
