@@ -120,6 +120,45 @@ def normalize_aws_account(col: F.Column) -> F.Column:
     )
 
 
+def _header(name: str) -> F.Column:
+    # last-wins per key: Kafka allows duplicate header keys, and
+    # map_from_entries raises DUPLICATED_MAP_KEY on them
+    matches = F.filter(F.col("metadata"), lambda h: h["key"] == name)
+    return F.try_element_at(matches, F.lit(-1))["value"]
+
+
+def reject_reason() -> F.Column:
+    """The admission gate, from a raw message's ``key`` and ``metadata``:
+    why it is rejected, or NULL when it passes. Reasons mirror the
+    reference's errors: missing metadata (vulcan/vulcan.go:136-156),
+    unsupported version (vulcan.go:160-180), malformed key
+    (vulcan.go:127-133). ``decode_events`` keeps the NULL rows;
+    streaming/windows.dead_letter_split tags rows with the reason.
+
+    Hardened (round 4): under ANSI mode a crash here poisons a streaming
+    micro-batch PERMANENTLY (the checkpoint replays the message on every
+    restart). So the semver major parses via ``try_cast`` (a cast of
+    'vX.2.0' raises) and a non-numeric one is unsupported, and a NULL key
+    is malformed (``size(split(NULL))`` is NULL, not valid)."""
+    version = _header("version")
+    ver_parts = F.split(F.regexp_replace(version, "^v", ""), r"\.")
+    version_ok = F.coalesce(
+        (F.size(ver_parts) >= 3)
+        & (F.try_element_at(ver_parts, F.lit(1)).try_cast("int") == 0),
+        F.lit(False),
+    )
+    key_ok = F.coalesce(F.size(F.split(F.col("key"), "/")) == 2, F.lit(False))
+    key = F.coalesce(F.col("key"), F.lit("<null>"))
+    return (
+        F.when(version.isNull(), "missing metadata entry: version")
+        .when(_header("type").isNull(), "missing metadata entry: type")
+        .when(_header("identifier").isNull(), "missing metadata entry: identifier")
+        .when(~version_ok, F.concat(F.lit("unsupported version: "), version))
+        .when(~key_ok, F.concat(F.lit("malformed message key: "), key))
+        .otherwise(F.lit(None).cast("string"))
+    )
+
+
 def decode_events(raw: DataFrame, annotation_key: str = AWS_ANNOTATION_KEY) -> DataFrame:
     """Decode + gate the raw stream into typed event rows.
 
@@ -127,34 +166,12 @@ def decode_events(raw: DataFrame, annotation_key: str = AWS_ANNOTATION_KEY) -> D
     team_name, aws_accounts (array of normalized ARNs). `annotation_key`
     mirrors cfg.AWSAccountAnnotationKey (main.go:131-138).
 
-    Rows failing the mandatory-header or semver checks are dropped here
+    Rows the admission gate (``reject_reason``) rejects are dropped here
     (the engine's dead-letter split; the reference instead halts —
     vulcan/vulcan.go:88-106).
-
-    Hardened (round 4) so a malformed message can never crash the batch —
-    under ANSI mode (Spark 4 default) a crash here poisons a streaming
-    micro-batch PERMANENTLY (the checkpoint replays the same message on
-    every restart): headers extract per key with last-wins instead of
-    ``map_from_entries`` (Kafka allows duplicate header keys;
-    map_from_entries raises DUPLICATED_MAP_KEY), and the semver major
-    parses via ``try_cast`` (a plain cast of 'vX.2.0' raises
-    CAST_INVALID_INPUT); a non-numeric major fails the version gate.
-    Same pattern as streaming/windows.dead_letter_split.
     """
-
-    def header(name: str):
-        matches = F.filter(F.col("metadata"), lambda h: h["key"] == name)
-        return F.try_element_at(matches, F.lit(-1))["value"]
-
-    version = header("version")
-    header_type = header("type")
-    header_identifier = header("identifier")
-    ver_parts = F.split(F.regexp_replace(version, "^v", ""), r"\.")
-    version_ok = F.coalesce(
-        (F.size(ver_parts) >= 3)
-        & (F.try_element_at(ver_parts, F.lit(1)).try_cast("int") == 0),
-        F.lit(False),
-    )
+    header_type = _header("type")
+    header_identifier = _header("identifier")
 
     key_parts = F.split(F.col("key"), "/")
     key_team = F.element_at(key_parts, 1)
@@ -172,13 +189,7 @@ def decode_events(raw: DataFrame, annotation_key: str = AWS_ANNOTATION_KEY) -> D
     )
 
     return (
-        raw.where(
-            version.isNotNull()
-            & header_type.isNotNull()
-            & header_identifier.isNotNull()
-            & version_ok
-            & (F.size(key_parts) == 2)
-        )
+        raw.where(reject_reason().isNull())
         .select(
             "seq",
             "ts",

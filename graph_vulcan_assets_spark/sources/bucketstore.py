@@ -5,26 +5,28 @@ The reference's whole write side is keyed upserts into an external store
 (inventory/inventory.go: create-or-update per asset/team/edge). Spark's
 parquet sink alone can only append or overwrite, so round 1/2 emulated
 MERGE with a full outer-join + full-snapshot rewrite — O(table) per
-batch. This module owns the bucket-version layout as a reusable storage
-primitive; its module-level functions (``bucket_of``, meta I/O, marker
-listing, ``live_versions``, ``read_versions``, ``prune_versions``) are
-also the state I/O of the streaming entity sink
-(streaming/ingest.TemporalGraphStream), which commits several tables
-under one marker:
+batch. This module owns the bucket-version layout and its one commit
+protocol. Its module-level functions (``bucket_of``, meta I/O, marker
+listing, ``live_versions``, ``table_versions``, ``read_live``,
+``acknowledge``) are the state I/O of every versioned store in the
+package: ``BucketTable``, the streaming entity sink
+(streaming/ingest.TemporalGraphStream, which commits several tables under
+one marker) and the maintained aggregate and HLL sketch states
+(streaming/incremental, one bucket each):
 
 - rows live in ``bucket=B`` partitions, B = pmod(xxhash64(key), N) —
   co-partitioned by key, so a MERGE touches only the buckets the batch's
   keys hash into;
 - each write creates ``batch=N/bucket=B`` VERSION dirs; the live view
-  resolves, per bucket, to the newest committed version. Nothing is
-  rewritten in place — writers never corrupt readers (snapshot
+  (``read_live``) resolves, per bucket, to the newest committed version.
+  Nothing is rewritten in place — writers never corrupt readers (snapshot
   isolation, the same idea as a Delta transaction log, with the
   filesystem listing as the log);
-- commits are marker-last (``_commits/N``): a crash mid-write leaves
+- commits are marker-last (``acknowledge``): a crash mid-write leaves
   orphan versions that readers never see and a re-run overwrites;
 - ``read(version=V)`` time-travels to any retained commit;
-- superseded versions are pruned per bucket (keep the last
-  ``keep_versions`` commits' view).
+- superseded versions are pruned per bucket by the same ``acknowledge``
+  step (keep the last ``keep_versions`` commits' view).
 
 MERGE semantics: ``upsert(batch)`` = insert-or-replace by key (the
 reference's create-or-update). ``delete(keys)`` removes rows. Both are
@@ -51,10 +53,9 @@ from pyspark.sql.types import StructType
 
 
 # ---- the bucket-version layout ------------------------------------------
-# Shared by BucketTable and the streaming entity sink
-# (streaming/ingest.TemporalGraphStream), which keeps several tables under
-# one commit marker. A table dir holds ``_meta.json`` and ``batch=N/bucket=B``
-# version dirs; which N are committed is the caller's marker listing.
+# Shared by every versioned store (module docstring). A table dir holds
+# ``batch=N/bucket=B`` version dirs; which N are committed is the caller's
+# marker listing.
 
 def bucket_of(cols, n_buckets: int) -> Column:
     """Deterministic bucket id of a row: pmod(xxhash64(key), N)."""
@@ -77,9 +78,10 @@ def save_meta(path: str, meta: dict) -> None:
     os.replace(target + ".tmp", target)
 
 
-def list_markers(marker_dir: str) -> list[int]:
-    """Sorted ids of the commit markers in ``marker_dir``."""
-    return sorted(int(f) for f in os.listdir(marker_dir) if f.isdigit())
+def list_markers(marker_dir: str, as_of: int | None = None) -> list[int]:
+    """Sorted ids of the commit markers in ``marker_dir``, up to ``as_of``."""
+    ids = sorted(int(f) for f in os.listdir(marker_dir) if f.isdigit())
+    return [c for c in ids if as_of is None or c <= as_of]
 
 
 def _version_dirs(path: str) -> list[tuple[int, str]]:
@@ -113,14 +115,26 @@ def live_versions(path: str, committed: set[int]) -> dict[int, int]:
     return out
 
 
-def read_versions(
-    spark: SparkSession, path: str, schema: StructType, versions: dict[int, int]
+def table_versions(path: str, as_of: int | None = None) -> dict[int, int]:
+    """bucket id → live version of a BucketTable dir (markers in
+    ``path/_commits``), as of commit ``as_of``."""
+    return live_versions(path, set(list_markers(os.path.join(path, "_commits"), as_of)))
+
+
+def read_live(
+    spark: SparkSession,
+    path: str,
+    schema: StructType | str,
+    committed: list[int],
+    buckets: set[int] | None = None,
 ) -> DataFrame:
-    """The rows of the given (bucket → version) dirs; only those dirs are
-    opened. No versions → a typed empty frame."""
+    """The live view of a table dir: per bucket, its newest ``committed``
+    version. With ``buckets``, only those buckets' dirs are opened. No
+    live bucket → a typed empty frame."""
     paths = [
         os.path.join(path, f"batch={v}", f"bucket={b}")
-        for b, v in sorted(versions.items())
+        for b, v in sorted(live_versions(path, set(committed)).items())
+        if buckets is None or b in buckets
     ]
     if not paths:
         return spark.createDataFrame([], schema)
@@ -151,6 +165,20 @@ def prune_versions(path: str, committed: list[int], keep: int) -> None:
     for v, d in _version_dirs(path):
         if v < newest and not _bucket_ids(d):
             shutil.rmtree(d, ignore_errors=True)
+
+
+def acknowledge(
+    marker_dir: str, version: int, table_dirs: list[str], keep: int, body: str = "ok"
+) -> None:
+    """Commit ``version`` of every table in ``table_dirs``: write its
+    marker (holding ``body``) LAST, so a crash anywhere before leaves only
+    orphan versions that readers ignore and a re-run overwrites; then
+    prune each table dir to ``keep`` committed versions per bucket."""
+    with open(os.path.join(marker_dir, str(version)), "w") as f:
+        f.write(body)
+    committed = list_markers(marker_dir)
+    for d in table_dirs:
+        prune_versions(d, committed, keep)
 
 
 class BucketTable:
@@ -188,8 +216,8 @@ class BucketTable:
             self._schema = None
 
     # ---- metadata -------------------------------------------------------
-    def commits(self) -> list[int]:
-        return list_markers(os.path.join(self.path, "_commits"))
+    def commits(self, as_of: int | None = None) -> list[int]:
+        return list_markers(os.path.join(self.path, "_commits"), as_of)
 
     def _commit_buckets(self) -> dict[int, set[int] | None]:
         """Commit id → the buckets that commit wrote (recorded in the
@@ -236,10 +264,7 @@ class BucketTable:
         return bucket_of(self.bucket_cols, self.n_buckets)
 
     def _bucket_versions(self, as_of: int | None = None) -> dict[int, int]:
-        committed = set(self.commits())
-        if as_of is not None:
-            committed = {c for c in committed if c <= as_of}
-        return live_versions(self.path, committed)
+        return table_versions(self.path, as_of)
 
     # ---- reads ----------------------------------------------------------
     def read(self, version: int | None = None, buckets: set[int] | None = None) -> DataFrame:
@@ -252,10 +277,9 @@ class BucketTable:
             self._check_time_travel(version, buckets)
         if self._schema is None:
             raise ValueError("empty BucketTable has no schema yet")
-        versions = self._bucket_versions(as_of=version)
-        if buckets is not None:
-            versions = {b: v for b, v in versions.items() if b in buckets}
-        return read_versions(self.spark, self.path, self._schema, versions)
+        return read_live(
+            self.spark, self.path, self._schema, self.commits(as_of=version), buckets
+        )
 
     def _touched(self, keyed: DataFrame) -> set[int]:
         return {
@@ -289,14 +313,16 @@ class BucketTable:
                 "schema": self._schema.json(),
             },
         )
-        # marker LAST: readers resolve only committed versions, so a crash
-        # anywhere above leaves the table at the previous commit. The
-        # marker records the buckets this version wrote (read back from
+        # the marker records the buckets this version wrote (read back from
         # the landed dirs — exact, including explicit empty buckets) so
-        # time-travel reads can detect a pruned-away as-of view.
-        with open(os.path.join(self.path, "_commits", str(version)), "w") as f:
-            json.dump({"buckets": sorted(_bucket_ids(base))}, f)
-        prune_versions(self.path, self.commits(), self.keep_versions)
+        # time-travel reads can detect a pruned-away as-of view
+        acknowledge(
+            os.path.join(self.path, "_commits"),
+            version,
+            [self.path],
+            self.keep_versions,
+            body=json.dumps({"buckets": sorted(_bucket_ids(base))}),
+        )
 
     def upsert(self, batch: DataFrame) -> int:
         """MERGE: insert-or-replace rows by key. Touches only the buckets

@@ -45,7 +45,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from graph_vulcan_assets_spark.sources.bucketstore import list_markers, live_versions
+from graph_vulcan_assets_spark.sources.bucketstore import list_markers, table_versions
 
 # --- Spark-compatible xxhash64 of a single BIGINT (seed 42) ---------------
 
@@ -93,17 +93,6 @@ def _load_meta(path: str) -> dict:
         return json.load(f)
 
 
-def _commits(path: str) -> list[int]:
-    return list_markers(os.path.join(path, "_commits"))
-
-
-def _bucket_versions(path: str, as_of: int | None) -> dict[int, int]:
-    committed = set(_commits(path))
-    if as_of is not None:
-        committed = {c for c in committed if c <= as_of}
-    return live_versions(path, committed)
-
-
 class _BucketPartition(InputPartition):
     def __init__(self, directory: str):
         self.directory = directory
@@ -131,7 +120,7 @@ class BucketTableReader(DataSourceReader):
             self.key_value = int(options["key"])
 
     def partitions(self):
-        versions = _bucket_versions(self.path, self.version)
+        versions = table_versions(self.path, self.version)
         if self.key_value is not None:
             keep = bucket_of_long(self.key_value, self.n_buckets)
             versions = {b: v for b, v in versions.items() if b == keep}
@@ -215,8 +204,8 @@ def diff_commits(path: str, key_cols: list[str], start: int | None, end: int) ->
     key whose value differs, ``(*key, change_type, *after_values)`` with
     None after-values on delete. Only buckets whose resolved version
     differs are opened."""
-    vs = _bucket_versions(path, start) if start is not None and start >= 0 else {}
-    ve = _bucket_versions(path, end)
+    vs = table_versions(path, start) if start is not None and start >= 0 else {}
+    ve = table_versions(path, end)
     changed = {b for b in set(vs) | set(ve) if vs.get(b) != ve.get(b)}
     meta = _load_meta(path)
     schema = json.loads(meta["schema"])
@@ -256,7 +245,7 @@ class BucketTableStreamReader(SimpleDataSourceStreamReader):
         return {"commit": -1}
 
     def read(self, start: dict):
-        commits = _commits(self.path)
+        commits = list_markers(os.path.join(self.path, "_commits"))
         last = commits[-1] if commits else -1
         if last <= start["commit"]:
             return iter([]), start

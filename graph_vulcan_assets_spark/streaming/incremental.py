@@ -9,7 +9,10 @@ per micro-batch without rescanning history. That is what
 ``maintain_aggregate`` does: each micro-batch contributes a partial
 aggregate (map-side combine inside the batch), which merges into a
 groups-sized state table. Work per batch is O(batch + |groups|), never
-O(history).
+O(history). ``maintain_hll`` does the same for distinct-user HLL sketches.
+Both states live on ``sources/bucketstore``'s layout as one bucket that
+each merge writes whole (``batch=N/bucket=0``), read by ``read_live`` and
+committed by ``acknowledge`` (marker last, newest two versions kept).
 
 Stream-stream joins and watermarked dedup are the other two Structured
 Streaming primitives a 100 TB event pipeline leans on:
@@ -24,10 +27,15 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graph_vulcan_assets_spark.sources.bucketstore import list_markers
+from graph_vulcan_assets_spark.sources.bucketstore import (
+    acknowledge,
+    list_markers,
+    live_versions,
+    read_live,
+)
 from graph_vulcan_assets_spark.tables import finite_values, micros128
 
 # Maintained aggregate: per event_type row counts and exact micro-unit
@@ -37,13 +45,21 @@ from graph_vulcan_assets_spark.tables import finite_values, micros128
 # parquet stores DECIMAL(38,0) so the maintained sum never hits the
 # int64 edge that a bigint state column would re-introduce at merge.
 # STATE-FORMAT COMPATIBILITY (ADVICE r11): the round-11 long→decimal(38,0)
-# widening is a BREAKING state-format change — _read_live_state reads the
-# state parquet under this schema, and parquet will not serve an
+# widening is a BREAKING state-format change — the state read (read_live)
+# reads the state parquet under this schema, and parquet will not serve an
 # int64-written column as decimal. A deployment upgrading across round 11
 # must start from a fresh state_dir (and streaming checkpoint — Spark's
 # state-schema compatibility check rejects the old checkpoint anyway) or
 # migrate once by reading batch=N with the OLD bigint schema and
 # rewriting it cast to decimal(38,0) before the first post-upgrade merge.
+# The move onto bucketstore's layout is a second breaking change, for this
+# state and the HLL sketch state alike: a version is now
+# batch=N/bucket=0, no longer batch=N. A state dir with _applied markers
+# but no live bucket= version was written by the old layout; read as-is
+# it would come back EMPTY and silently restart the totals, so the merge
+# and the read refuse it (ValueError). Start such a deployment from a
+# fresh state_dir and checkpoint, or migrate once by moving each
+# acknowledged batch=N's parquet files into batch=N/bucket=0.
 _AGG_SCHEMA = "event_type string, n bigint, sum_micros decimal(38,0)"
 
 
@@ -67,72 +83,69 @@ def batch_aggregate(events: DataFrame) -> DataFrame:
     )
 
 
-def _applied_state_batches(state_dir: str) -> list[int]:
-    d = os.path.join(state_dir, "_applied")
-    os.makedirs(d, exist_ok=True)
-    return list_markers(d)
+def _acknowledged(state_dir: str) -> list[int]:
+    """Acknowledged batch ids; refuses the old layout (STATE-FORMAT note)."""
+    marker_dir = os.path.join(state_dir, "_applied")
+    os.makedirs(marker_dir, exist_ok=True)
+    applied = list_markers(marker_dir)
+    if applied and not live_versions(state_dir, set(applied)):
+        raise ValueError(
+            f"{state_dir} has acknowledged batches but no bucket= version: it "
+            "was written by the old whole-table state layout; start from a "
+            "fresh state dir or move each batch=N into batch=N/bucket=0"
+        )
+    return applied
 
 
-def _read_live_state(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:
-    applied = _applied_state_batches(state_dir)
-    if not applied:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(
-        os.path.join(state_dir, f"batch={applied[-1]}")
+def _read_state(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:
+    return read_live(spark, state_dir, schema, _acknowledged(state_dir))
+
+
+def _add(cur: Column, new: Column) -> Column:
+    return F.coalesce(cur, F.lit(0)) + F.coalesce(new, F.lit(0))
+
+
+def _merge_state(
+    spark: SparkSession,
+    state_dir: str,
+    schema: str,
+    part: DataFrame,
+    batch_id: int,
+    keys: list[str],
+    combine: dict,
+) -> None:
+    """Merge one micro-batch's ``part`` into a state table: a full-outer
+    join on ``keys`` with ``combine[c](cur, new)`` for every other column,
+    |groups|-sized, never history-sized.
+
+    IDEMPOTENT under at-least-once redelivery: an already-acknowledged
+    ``batch_id`` is skipped (foreachBatch can re-deliver a batch whose
+    merge committed but whose offsets didn't; the partial would otherwise
+    count twice, permanently). The new state is acknowledged only after
+    it lands, so a crash mid-write leaves an ignored orphan and the
+    previous state intact; two versions are kept, so the redelivered
+    batch still finds the previous state to re-merge against."""
+    applied = _acknowledged(state_dir)
+    if batch_id in applied:
+        return
+    cur = read_live(spark, state_dir, schema, applied)
+    p = part.select(*[F.col(c).alias("p_" + c) for c in cur.columns])
+    merged = cur.join(p, [cur[k] == p["p_" + k] for k in keys], "full_outer").select(
+        *[F.coalesce(cur[k], p["p_" + k]).alias(k) for k in keys],
+        *[fn(cur[c], p["p_" + c]).alias(c) for c, fn in combine.items()],
     )
-
-
-def _commit_state(merged: DataFrame, state_dir: str, batch_id: int) -> None:
-    """Versioned marker-last commit (the entity sink's protocol): the new
-    state lands as ``batch=N`` and only then is acknowledged, so a crash
-    mid-write leaves an ignored orphan and the previous state intact —
-    never the rmtree-then-rename window where ALL accumulated state could
-    vanish silently. Keeps the newest two acknowledged versions (the
-    redelivered batch after a crash-before-marker must still find the
-    previous state to re-merge against)."""
-    import shutil
-
     merged.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch={batch_id}")
+        os.path.join(state_dir, f"batch={batch_id}", "bucket=0")
     )
-    with open(os.path.join(state_dir, "_applied", str(batch_id)), "w") as f:
-        f.write("ok")
-    for bid in _applied_state_batches(state_dir)[:-2]:
-        shutil.rmtree(os.path.join(state_dir, f"batch={bid}"), ignore_errors=True)
+    acknowledge(os.path.join(state_dir, "_applied"), batch_id, [state_dir], keep=2)
 
 
 def merge_aggregate_state(
     spark: SparkSession, state_dir: str, partial: DataFrame, batch_id: int
 ) -> None:
-    """Merge one micro-batch's partial aggregate into the state table.
-
-    Full-outer join + coalesce-add on the (tiny) groups table — the same
-    MERGE emulation the entity sink uses (streaming/ingest.py). The state
-    rewrite is |groups|-sized, not history-sized. IDEMPOTENT under
-    at-least-once redelivery: an already-acknowledged ``batch_id`` is
-    skipped (foreachBatch can re-deliver a batch whose merge committed
-    but whose offsets didn't — without the guard the partial would
-    double-count into the totals permanently).
-    """
-    if batch_id in _applied_state_batches(state_dir):
-        return
-    cur = _read_live_state(spark, state_dir, _AGG_SCHEMA)
-    p = partial.select(
-        F.col("event_type").alias("p_event_type"),
-        F.col("n").alias("p_n"),
-        F.col("sum_micros").alias("p_sum"),
-    )
-    merged = (
-        cur.join(p, cur.event_type == p.p_event_type, "full_outer")
-        .select(
-            F.coalesce(cur.event_type, p.p_event_type).alias("event_type"),
-            (F.coalesce(cur.n, F.lit(0)) + F.coalesce(p.p_n, F.lit(0))).alias("n"),
-            (F.coalesce(cur.sum_micros, F.lit(0)) + F.coalesce(p.p_sum, F.lit(0)))
-            .cast("decimal(38,0)")
-            .alias("sum_micros"),
-        )
-    )
-    _commit_state(merged, state_dir, batch_id)
+    """Merge one micro-batch's partial aggregate: counts and sums add."""
+    combine = {"n": _add, "sum_micros": lambda c, p: _add(c, p).cast("decimal(38,0)")}
+    _merge_state(spark, state_dir, _AGG_SCHEMA, partial, batch_id, ["event_type"], combine)
 
 
 def maintain_aggregate(
@@ -158,7 +171,7 @@ def maintain_aggregate(
 
 
 def read_aggregate_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _read_live_state(spark, state_dir, _AGG_SCHEMA)
+    return _read_state(spark, state_dir, _AGG_SCHEMA)
 
 
 def join_within(
@@ -297,34 +310,17 @@ def merge_hll_state(
     re-reading history — union is register-wise on 4 KiB blobs, so the
     state rewrite is |groups|-sized. `hll_union` with strict lgK match
     (a silent precision downgrade in a long-lived state table is a
-    correctness hazard). Same idempotent versioned-commit protocol as
-    merge_aggregate_state (n_rows would double-count on redelivery; HLL
-    union itself is idempotent, but the protocol covers both).
+    correctness hazard). Same idempotent versioned commit as
+    merge_aggregate_state (``_merge_state``: n_rows would double-count on
+    redelivery; HLL union itself is idempotent, but the protocol covers
+    both).
     """
-    if batch_id in _applied_state_batches(state_dir):
-        return
-    cur = _read_live_state(spark, state_dir, _HLL_SCHEMA)
-    p = leaves.select(
-        F.col("event_type").alias("p_type"),
-        F.col("day").alias("p_day"),
-        F.col("sketch").alias("p_sketch"),
-        F.col("n_rows").alias("p_n"),
-    )
-    both = F.hll_union(cur.sketch, p.p_sketch, False)
-    merged = cur.join(
-        p, (cur.event_type == p.p_type) & (cur.day == p.p_day), "full_outer"
-    ).select(
-        F.coalesce(cur.event_type, p.p_type).alias("event_type"),
-        F.coalesce(cur.day, p.p_day).alias("day"),
-        F.when(cur.sketch.isNull(), p.p_sketch)
-        .when(p.p_sketch.isNull(), cur.sketch)
-        .otherwise(both)
-        .alias("sketch"),
-        (F.coalesce(cur.n_rows, F.lit(0)) + F.coalesce(p.p_n, F.lit(0))).alias(
-            "n_rows"
-        ),
-    )
-    _commit_state(merged, state_dir, batch_id)
+    def union(c: Column, p: Column) -> Column:
+        return F.when(c.isNull(), p).when(p.isNull(), c).otherwise(F.hll_union(c, p, False))
+
+    keys = ["event_type", "day"]
+    combine = {"sketch": union, "n_rows": _add}
+    _merge_state(spark, state_dir, _HLL_SCHEMA, leaves, batch_id, keys, combine)
 
 
 def maintain_hll(stream: DataFrame, state_dir: str, checkpoint_dir: str):
@@ -351,7 +347,7 @@ def maintain_hll(stream: DataFrame, state_dir: str, checkpoint_dir: str):
 
 def read_hll_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current sketch state, with the estimate materialized per row."""
-    s = _read_live_state(spark, state_dir, _HLL_SCHEMA)
+    s = _read_state(spark, state_dir, _HLL_SCHEMA)
     return s.select(
         "event_type",
         "day",

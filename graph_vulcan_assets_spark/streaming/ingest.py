@@ -19,8 +19,9 @@ O(state). The state layout is ``sources/bucketstore``'s bucket-version
 store, shared with ``BucketTable``: each state table is hash-bucketed by
 its natural key (``bucketstore.bucket_of``), every write is a
 ``batch=N/bucket=B`` version dir, and the live view of a table is, per
-bucket, its newest ACKNOWLEDGED version. What this module adds is one
-commit marker for all tables (``_applied/N``, written last), so a batch
+bucket, its newest ACKNOWLEDGED version (``bucketstore.read_live``).
+What this module adds is one commit marker for all tables
+(``_applied/N``, written last by ``bucketstore.acknowledge``), so a batch
 commits atomically across them. A micro-batch
 - reads ONLY the buckets its touched keys hash into,
 - seeds ONLY the state rows whose entity keys the batch touches (each row
@@ -82,12 +83,11 @@ from graph_vulcan_assets_spark.plans.temporal import (
     tuned_for_batch,
 )
 from graph_vulcan_assets_spark.sources.bucketstore import (
+    acknowledge,
     bucket_of,
     list_markers,
-    live_versions,
     load_meta,
-    prune_versions,
-    read_versions,
+    read_live,
     save_meta,
 )
 
@@ -176,7 +176,7 @@ class TemporalGraphStream:
         state_dir: str,
         annotation_key: str | None = None,
         fault=None,
-        n_buckets: int | None = None,
+        n_buckets: int = 32,
     ):
         self.spark = spark
         self.state_dir = state_dir
@@ -192,9 +192,7 @@ class TemporalGraphStream:
                 t: StructType.fromJson(json.loads(s)) for t, s in meta["schemas"].items()
             }
         else:
-            self.n_buckets = n_buckets or int(
-                os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "32")
-            )
+            self.n_buckets = n_buckets
             self._schemas = {}
         if self._applied_batches() and PARENT_IDX not in self._schemas:
             raise ValueError(
@@ -214,11 +212,13 @@ class TemporalGraphStream:
         """Assemble a state table from its live bucket versions; with
         ``bucket_ids`` given, read ONLY those buckets (the O(batch) read
         path — untouched buckets are never opened)."""
-        base = os.path.join(self.state_dir, table)
-        versions = live_versions(base, set(self._applied_batches()))
-        if bucket_ids is not None:
-            versions = {b: v for b, v in versions.items() if b in bucket_ids}
-        return read_versions(self.spark, base, self._schemas[table], versions)
+        return read_live(
+            self.spark,
+            os.path.join(self.state_dir, table),
+            self._schemas[table],
+            self._applied_batches(),
+            bucket_ids,
+        )
 
     def read_state(self) -> dict[str, DataFrame] | None:
         if not self._applied_batches():
@@ -307,19 +307,17 @@ class TemporalGraphStream:
             },
         )
         # marker written last: a crash mid-write leaves the batch
-        # unacknowledged — its bucket versions are orphans the read side
-        # ignores — and it is re-applied on restart against the previous
-        # acknowledged view (at-least-once → idempotent, matching
-        # kafka.go:98-104's commit-after-process)
-        with open(os.path.join(self.state_dir, "_applied", str(batch_id)), "w") as f:
-            f.write("ok")
-        # per bucket, keep the newest TWO acknowledged versions: a crash
-        # between a batch's state write and its marker leaves it
-        # unacknowledged, and the redelivered batch must still find every
-        # bucket's previous acknowledged version to re-apply against
-        applied = self._applied_batches()
-        for t in (*STATE_TABLES, PARENT_IDX):
-            prune_versions(os.path.join(self.state_dir, t), applied, keep=2)
+        # unacknowledged, and it is re-applied on restart against the
+        # previous acknowledged view (at-least-once → idempotent, matching
+        # kafka.go:98-104's commit-after-process). Per bucket, the newest
+        # TWO acknowledged versions are kept, so that redelivered batch
+        # still finds every bucket's previous version to re-apply against.
+        acknowledge(
+            os.path.join(self.state_dir, "_applied"),
+            batch_id,
+            [os.path.join(self.state_dir, t) for t in (*STATE_TABLES, PARENT_IDX)],
+            keep=2,
+        )
 
     # ---- index compaction (maintenance) ---------------------------------
     def _index_staging_dir(self) -> str:

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from graph_vulcan_assets_spark.plans.temporal import reject_reason
 from graph_vulcan_assets_spark.tables import bounded_times, finite_values, micros128
 
 
@@ -109,47 +110,11 @@ def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
 def dead_letter_split(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split a raw message frame into (valid, dead_letter-with-reason).
 
-    Reasons mirror the reference's error strings: missing metadata
-    (vulcan/vulcan.go:136-156), unsupported version (vulcan.go:160-180),
-    malformed key (vulcan.go:127-133).
-
-    Hardened (round 4) so malformed input can NEVER crash the stream —
-    crashing on a bad row is exactly the halt-on-first-malformed-event
-    behavior this gate exists to replace:
-    - headers are extracted per key with last-wins (Kafka allows
-      duplicate header keys; ``map_from_entries`` raises
-      DUPLICATED_MAP_KEY and kills the query for ALL rows),
-    - the major version parses via ``try_cast`` (ANSI mode makes a plain
-      cast of 'vX.1.2' throw CAST_INVALID_INPUT), and a non-numeric
-      major is rejected as unsupported, not NULL-skipped,
-    - a NULL key is malformed (``size(split(NULL))`` is NULL, and a NULL
-      predicate silently fell through to VALID before).
+    The gate is ``plans.temporal.reject_reason``, the one ``decode_events``
+    applies, so the valid half is exactly the rows the decode keeps;
+    malformed input is dead-lettered with a reason, never a crash.
     """
-
-    def header(name: str):
-        matches = F.filter(F.col("metadata"), lambda h: h["key"] == name)
-        return F.try_element_at(matches, F.lit(-1))["value"]
-
-    version = header("version")
-    htype = header("type")
-    hident = header("identifier")
-    ver_parts = F.split(F.regexp_replace(version, "^v", ""), r"\.")
-    version_ok = F.coalesce(
-        (F.size(ver_parts) >= 3)
-        & (F.try_element_at(ver_parts, F.lit(1)).try_cast("int") == 0),
-        F.lit(False),
-    )
-    key_ok = F.coalesce(F.size(F.split(F.col("key"), "/")) == 2, F.lit(False))
-
-    reason = (
-        F.when(version.isNull(), "missing metadata entry: version")
-        .when(htype.isNull(), "missing metadata entry: type")
-        .when(hident.isNull(), "missing metadata entry: identifier")
-        .when(~version_ok, F.concat(F.lit("unsupported version: "), version))
-        .when(~key_ok, F.concat(F.lit("malformed message key: "), F.coalesce(F.col("key"), F.lit("<null>"))))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    tagged = raw.withColumn("reject_reason", reason)
+    tagged = raw.withColumn("reject_reason", reject_reason())
     valid = tagged.where(F.col("reject_reason").isNull()).drop("reject_reason")
     dead = tagged.where(F.col("reject_reason").isNotNull())
     return valid, dead

@@ -115,6 +115,8 @@ def test_aggregate_merge_redelivery_and_crash_are_safe(spark, sf_dir, tmp_path):
     other = events.where(F.pmod("event_id", F.lit(2)) == 1)
     partial = incremental.batch_aggregate(other)
     partial.write.mode("overwrite").parquet(os.path.join(state, "batch=1"))  # no marker
+    # the same crash at the version path the state is read from
+    partial.write.mode("overwrite").parquet(os.path.join(state, "batch=1", "bucket=0"))
     assert {
         r["event_type"]: (r["n"], r["sum_micros"])
         for r in incremental.read_aggregate_state(spark, state).collect()
@@ -130,6 +132,57 @@ def test_aggregate_merge_redelivery_and_crash_are_safe(spark, sf_dir, tmp_path):
     }
     assert got == want
     shutil.rmtree(state, ignore_errors=True)
+
+
+def _partial(spark, n):
+    """A one-group partial aggregate: ``n`` rows of value 1.0."""
+    from decimal import Decimal
+
+    return spark.createDataFrame(
+        [("view", n, Decimal(n * 1000000))],
+        "event_type string, n bigint, sum_micros decimal(38,0)",
+    )
+
+
+def test_aggregate_state_refuses_old_layout(spark, tmp_path):
+    """A state dir of the old whole-table layout (an acknowledged
+    ``batch=N`` holding the parquet files directly, no ``bucket=`` version)
+    is refused: read as-is it would come back empty and silently restart
+    the totals."""
+    import os
+
+    import pytest
+
+    state = str(tmp_path / "state")
+    partial = _partial(spark, 3)
+    partial.write.parquet(os.path.join(state, "batch=0"))
+    os.makedirs(os.path.join(state, "_applied"))
+    with open(os.path.join(state, "_applied", "0"), "w") as f:
+        f.write("ok")
+    with pytest.raises(ValueError, match="old whole-table state layout"):
+        incremental.read_aggregate_state(spark, state)
+    with pytest.raises(ValueError, match="old whole-table state layout"):
+        incremental.merge_aggregate_state(spark, state, partial, 1)
+
+
+def test_aggregate_state_keeps_two_acknowledged_versions(spark, tmp_path):
+    """After merges 0, 2 and 3, with batch 1's crashed write left behind
+    unacknowledged at ``batch=1/bucket=0``, only the two newest
+    acknowledged versions remain on disk, and the totals count each
+    merged batch once."""
+    import os
+
+    state = str(tmp_path / "state")
+    incremental.merge_aggregate_state(spark, state, _partial(spark, 1), 0)
+    _partial(spark, 10).write.parquet(os.path.join(state, "batch=1", "bucket=0"))
+    incremental.merge_aggregate_state(spark, state, _partial(spark, 100), 2)
+    incremental.merge_aggregate_state(spark, state, _partial(spark, 1000), 3)
+    assert sorted(d for d in os.listdir(state) if d.startswith("batch=")) == [
+        "batch=2",
+        "batch=3",
+    ]
+    [row] = incremental.read_aggregate_state(spark, state).collect()
+    assert (row.n, row.sum_micros) == (1101, 1101000000)
 
 
 def test_stream_stream_join_matches_batch(spark, sf_dir, tmp_path):

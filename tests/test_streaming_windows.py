@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from graph_vulcan_assets_spark.plans import fixtures
-from graph_vulcan_assets_spark.plans.temporal import RAW_SCHEMA
+from graph_vulcan_assets_spark.plans.temporal import RAW_SCHEMA, decode_events
 from graph_vulcan_assets_spark.streaming import windows
 from graph_vulcan_assets_spark.tables import load_table
 
@@ -55,6 +55,10 @@ def test_dead_letter_split(spark):
     assert reasons[12].startswith("malformed message key")
     assert set(reasons) == {10, 11, 12}
     assert valid.count() == len(msgs) - 3
+    # one gate: the decode keeps exactly the rows the split calls valid
+    assert sorted(r.seq for r in decode_events(raw).collect()) == sorted(
+        r.seq for r in valid.collect()
+    )
 
 
 def test_dead_letter_gate_survives_malformed_input(spark):
