@@ -25,14 +25,28 @@ the traversals are id-keyed (`Assets` returns ids, inventory.go:71-78;
 edges carry parent_id/child_id, inventory.go:89-96). The engine derives
 DETERMINISTIC surrogate ids — ``xxhash64`` over a per-entity-kind salt and
 the natural key — so ids are stable across replays, reproducible on any
-executor without coordination (no sequence generator, no shuffle). An
-id-keyed lookup is an equality filter on that computed hash, so it prunes
-no files; neither does a natural-key lookup over ``streaming.ingest``'s
-bucketed state, whose read side does not see the bucket column, so both
-scan every live file of the table. `assets()` /
-`teams()` surface `id`; edge views surface `parent_id`/`child_id`/
-`asset_id`/`team_ref`; the traversals accept either the natural key or
-``asset_id=``.
+executor without coordination (no sequence generator, no shuffle).
+`assets()` / `teams()` surface `id`; edge views surface `parent_id`/
+`child_id`/`asset_id`/`team_ref`; the traversals accept either the natural
+key or ``asset_id=``.
+
+File pruning: over ``streaming.ingest``'s state (``read_state()``, a
+``bucketstore.PinnedState``), a natural-key lookup opens only the bucket
+its key hashes into (``bucketstore.key_bucket``, computed on the driver)
+in the snapshot pinned when the state was read:
+- ``assets(type, identifier)``, ``teams(identifier)``, ``owners`` and
+  ``parents`` read that one bucket of their table (``owners`` also
+  broadcasts the whole teams table for its join);
+- ``children`` reads the parent key's ``parent_idx`` bucket, then only the
+  ``parent_of`` buckets that index points to; once
+  ``compact_parent_index`` has dropped expired edges' pointers, the pin
+  holds no index and ``children`` scans ``parent_of`` whole.
+Such a result is bounded by one key's rows, so it is sorted in one
+partition, with no range-partitioning shuffle: one Spark job (two for
+``owners``, whose teams broadcast is a job of its own). These are not pruned and scan every live
+file: ``asset_id=`` and ``*_by_id`` lookups (an equality filter on a
+computed hash), ``valid_at`` and keyset listings, and any read over a
+plain ``dict`` of frames, such as ``plans.temporal.replay_raw``'s.
 """
 
 from __future__ import annotations
@@ -41,6 +55,9 @@ import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from graph_vulcan_assets_spark.sources.bucketstore import PinnedState
+from graph_vulcan_assets_spark.streaming.ingest import PARENT_IDX
 
 
 def asset_id_col(type_col: Column, identifier_col: Column) -> Column:
@@ -52,6 +69,41 @@ def team_id_col(identifier_col: Column) -> Column:
     return F.xxhash64(F.lit("team"), identifier_col)
 
 
+def _asset_ids(assets: DataFrame) -> DataFrame:
+    return assets.select("*", asset_id_col(F.col("type"), F.col("identifier")).alias("id"))
+
+
+def _team_ids(teams: DataFrame) -> DataFrame:
+    return teams.select("*", team_id_col(F.col("identifier")).alias("id"))
+
+
+def _owns_ids(owns: DataFrame) -> DataFrame:
+    asset_id = asset_id_col(F.col("type"), F.col("asset_identifier"))
+    team_ref = team_id_col(F.col("team_id"))
+    return owns.select(
+        "*",
+        asset_id.alias("asset_id"),
+        team_ref.alias("team_ref"),
+        F.xxhash64(F.lit("owns"), asset_id, team_ref).alias("id"),
+    )
+
+
+def _edge_ids(parent_of: DataFrame) -> DataFrame:
+    parent_id = asset_id_col(F.col("parent_type"), F.col("parent_identifier"))
+    child_id = asset_id_col(F.col("child_type"), F.col("child_identifier"))
+    return parent_of.select(
+        "*",
+        parent_id.alias("parent_id"),
+        child_id.alias("child_id"),
+        F.xxhash64(F.lit("parent_of"), child_id, parent_id).alias("id"),
+    )
+
+
+_SURROGATES = {
+    "assets": _asset_ids, "teams": _team_ids, "owns": _owns_ids, "parent_of": _edge_ids,
+}
+
+
 def with_surrogate_ids(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """Augment state tables with the reference's id fields.
 
@@ -60,30 +112,15 @@ def with_surrogate_ids(state: dict[str, DataFrame]) -> dict[str, DataFrame]:
     parent_of gains `id`, `parent_id`, `child_id`
     (inventory.go:89-96,107-113).
     """
-    assets = state["assets"].withColumn(
-        "id", asset_id_col(F.col("type"), F.col("identifier"))
-    )
-    teams = state["teams"].withColumn("id", team_id_col(F.col("identifier")))
-    owns = (
-        state["owns"]
-        .withColumn("asset_id", asset_id_col(F.col("type"), F.col("asset_identifier")))
-        .withColumn("team_ref", team_id_col(F.col("team_id")))
-        .withColumn("id", F.xxhash64(F.lit("owns"), F.col("asset_id"), F.col("team_ref")))
-    )
-    parent_of = (
-        state["parent_of"]
-        .withColumn(
-            "parent_id",
-            asset_id_col(F.col("parent_type"), F.col("parent_identifier")),
-        )
-        .withColumn(
-            "child_id", asset_id_col(F.col("child_type"), F.col("child_identifier"))
-        )
-        .withColumn(
-            "id", F.xxhash64(F.lit("parent_of"), F.col("child_id"), F.col("parent_id"))
-        )
-    )
-    return {"assets": assets, "teams": teams, "owns": owns, "parent_of": parent_of}
+    return {t: add_ids(state[t]) for t, add_ids in _SURROGATES.items()}
+
+
+def _key_match(cols: tuple[str, ...], key: tuple) -> Column:
+    pred = None
+    for c, v in zip(cols, key):
+        clause = F.col(c) == v
+        pred = clause if pred is None else pred & clause
+    return pred
 
 
 def _paginate(df: DataFrame, order_cols: list[str], page: int | None, size: int | None) -> DataFrame:
@@ -122,7 +159,29 @@ def keyset_page(df: DataFrame, order_cols: list[str], after: tuple | None, size:
 
 class InventoryAPI:
     def __init__(self, state: dict[str, DataFrame]):
+        # a PinnedState (streaming.ingest.read_state) lets key lookups open
+        # one bucket; a plain dict of frames is read whole
+        self.pinned = state if isinstance(state, PinnedState) else None
         self.state = with_surrogate_ids(state)
+
+    def _by_key(self, table: str, cols: tuple[str, ...], key: tuple) -> DataFrame:
+        """Rows of ``table`` whose ``cols`` (its bucket key) equal ``key``:
+        over pinned state, only the key's bucket, in one partition."""
+        if self.pinned is None:
+            return self.state[table].where(_key_match(cols, key))
+        rows = self.pinned.read_key(table, key).where(_key_match(cols, key))
+        return _SURROGATES[table](rows).coalesce(1)
+
+    def _children_of(self, key: tuple) -> DataFrame:
+        """parent_of rows whose parent is ``key``: over pinned state, only
+        the child buckets the key's ``parent_idx`` bucket points to (read
+        on the driver, so the lookup stays one Spark job)."""
+        cols = ("parent_type", "parent_identifier")
+        if self.pinned is None or PARENT_IDX not in self.pinned.versions:
+            return self.state["parent_of"].where(_key_match(cols, key))
+        buckets = set(self.pinned.key_values(PARENT_IDX, key, cols, "child_bucket"))
+        rows = self.pinned.read_buckets("parent_of", buckets).where(_key_match(cols, key))
+        return _edge_ids(rows).coalesce(1)
 
     def assets(
         self,
@@ -132,11 +191,14 @@ class InventoryAPI:
         page: int | None = None,
         size: int | None = None,
     ) -> DataFrame:
-        df = self.state["assets"]
-        if asset_type:
-            df = df.where(F.col("type") == asset_type)
-        if identifier:
-            df = df.where(F.col("identifier") == identifier)
+        if asset_type and identifier:
+            df = self._by_key("assets", ("type", "identifier"), (asset_type, identifier))
+        else:
+            df = self.state["assets"]
+            if asset_type:
+                df = df.where(F.col("type") == asset_type)
+            if identifier:
+                df = df.where(F.col("identifier") == identifier)
         if valid_at is not None:
             df = df.where(
                 (F.col("first_seen") <= F.lit(valid_at))
@@ -166,9 +228,10 @@ class InventoryAPI:
         page: int | None = None,
         size: int | None = None,
     ) -> DataFrame:
-        df = self.state["teams"]
         if identifier:
-            df = df.where(F.col("identifier") == identifier)
+            df = self._by_key("teams", ("identifier",), (identifier,))
+        else:
+            df = self.state["teams"]
         return _paginate(df, ["identifier"], page, size)
 
     def asset_by_id(self, asset_id: int) -> DataFrame:
@@ -179,15 +242,12 @@ class InventoryAPI:
     def team_by_id(self, team_id: int) -> DataFrame:
         return self.state["teams"].where(F.col("id") == team_id)
 
-    @staticmethod
-    def _key_or_id(df, type_col, ident_col, asset_type, identifier, asset_id, id_col):
+    def _key_or_id(self, table, cols, asset_type, identifier, asset_id, id_col):
         if asset_id is not None:
-            return df.where(F.col(id_col) == asset_id)
+            return self.state[table].where(F.col(id_col) == asset_id)
         if asset_type is None or identifier is None:
             raise ValueError("pass either (asset_type, identifier) or asset_id=")
-        return df.where(
-            (F.col(type_col) == asset_type) & (F.col(ident_col) == identifier)
-        )
+        return self._by_key(table, cols, (asset_type, identifier))
 
     def owners(
         self,
@@ -202,7 +262,7 @@ class InventoryAPI:
         the reference's N+1 lookup collapsed into one broadcast join).
         Id-keyed form: GET /v1/assets/{id}/owners (inventory.go:603-628)."""
         owns = self._key_or_id(
-            self.state["owns"], "type", "asset_identifier",
+            "owns", ("type", "asset_identifier"),
             asset_type, identifier, asset_id, "asset_id",
         )
         teams = self.state["teams"].select(
@@ -226,7 +286,7 @@ class InventoryAPI:
     ) -> DataFrame:
         """Outgoing parent_of edges: the asset as CHILD (inventory.go:497-524)."""
         df = self._key_or_id(
-            self.state["parent_of"], "child_type", "child_identifier",
+            "parent_of", ("child_type", "child_identifier"),
             asset_type, identifier, asset_id, "child_id",
         )
         return _paginate(df, ["parent_type", "parent_identifier"], page, size)
@@ -241,8 +301,10 @@ class InventoryAPI:
         asset_id: int | None = None,
     ) -> DataFrame:
         """Incoming parent_of edges: the asset as PARENT (inventory.go:572-599)."""
-        df = self._key_or_id(
-            self.state["parent_of"], "parent_type", "parent_identifier",
-            asset_type, identifier, asset_id, "parent_id",
-        )
+        if asset_id is not None:
+            df = self.state["parent_of"].where(F.col("parent_id") == asset_id)
+        elif asset_type is None or identifier is None:
+            raise ValueError("pass either (asset_type, identifier) or asset_id=")
+        else:
+            df = self._children_of((asset_type, identifier))
         return _paginate(df, ["child_type", "child_identifier"], page, size)

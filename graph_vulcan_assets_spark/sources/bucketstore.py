@@ -12,7 +12,12 @@ listing, ``live_versions``, ``table_versions``, ``read_live``,
 package: ``BucketTable``, the streaming entity sink
 (streaming/ingest.TemporalGraphStream, which commits several tables under
 one marker) and the maintained aggregate and HLL sketch states
-(streaming/incremental, one bucket each):
+(streaming/incremental, one bucket each). Two serve key lookups:
+``key_bucket``, ``bucket_of``'s value for one literal key computed on the
+driver with no Spark job, and ``PinnedState``, several tables' live view
+pinned at one commit with each table's ``{bucket: live version}`` map
+(``TemporalGraphStream.read_state`` returns one; ``plans.api`` opens only
+a key's bucket of it):
 
 - rows live in ``bucket=B`` partitions, B = pmod(xxhash64(key), N) —
   co-partitioned by key, so a MERGE touches only the buckets the batch's
@@ -60,6 +65,73 @@ from pyspark.sql.types import StructType
 def bucket_of(cols, n_buckets: int) -> Column:
     """Deterministic bucket id of a row: pmod(xxhash64(key), N)."""
     return F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_buckets)).cast("int")
+
+
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """Spark's ``xxhash64`` of one value serialized as ``data`` (a
+    string's UTF-8 bytes, a BIGINT's 8 little-endian bytes): XXH64 seeded
+    with ``seed``, signed 64-bit as the JVM returns it."""
+    seed &= _M64
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i <= n - 32:
+            for j in range(4):
+                v[j] = _round(v[j], int.from_bytes(data[i + 8 * j:i + 8 * j + 8], "little"))
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for lane in v:
+            h = ((h ^ _round(0, lane)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i <= n - 8:
+        h ^= _round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i <= n - 4:
+        h ^= (int.from_bytes(data[i:i + 4], "little") * _P1) & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h ^= (byte * _P5) & _M64
+        h = (_rotl(h, 11) * _P1) & _M64
+    h ^= h >> 33
+    h = (h * _P2) & _M64
+    h ^= h >> 29
+    h = (h * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def key_bucket(values, n_buckets: int) -> int:
+    """``bucket_of`` for one literal key, computed on the driver with no
+    Spark job: Spark's ``xxhash64`` chains its seed (42) through the key's
+    columns, skipping NULLs, and ``pmod`` folds the signed result into
+    ``[0, N)``. Keys are strings (every state table's bucket key is)."""
+    h = 42
+    for v in values:
+        if v is None:
+            continue
+        if not isinstance(v, str):
+            raise TypeError(f"key_bucket hashes string keys, got {type(v).__name__}")
+        h = xxhash64(v.encode("utf-8"), h)
+    return h % n_buckets
 
 
 def load_meta(path: str) -> dict | None:
@@ -121,6 +193,22 @@ def table_versions(path: str, as_of: int | None = None) -> dict[int, int]:
     return live_versions(path, set(list_markers(os.path.join(path, "_commits"), as_of)))
 
 
+def _bucket_dirs(
+    path: str, versions: dict[int, int], buckets: set[int] | None
+) -> dict[int, str]:
+    return {
+        b: os.path.join(path, f"batch={v}", f"bucket={b}")
+        for b, v in sorted(versions.items())
+        if buckets is None or b in buckets
+    }
+
+
+def _read_dirs(spark: SparkSession, dirs: list[str], schema: StructType | str) -> DataFrame:
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*dirs)
+
+
 def read_live(
     spark: SparkSession,
     path: str,
@@ -131,14 +219,84 @@ def read_live(
     """The live view of a table dir: per bucket, its newest ``committed``
     version. With ``buckets``, only those buckets' dirs are opened. No
     live bucket → a typed empty frame."""
-    paths = [
-        os.path.join(path, f"batch={v}", f"bucket={b}")
-        for b, v in sorted(live_versions(path, set(committed)).items())
-        if buckets is None or b in buckets
-    ]
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
+    dirs = _bucket_dirs(path, live_versions(path, set(committed)), buckets)
+    return _read_dirs(spark, list(dirs.values()), schema)
+
+
+def _dir_id(path: str) -> int | None:
+    try:
+        return os.stat(path).st_ino
+    except FileNotFoundError:
+        return None
+
+
+class PinnedState(dict):
+    """The live view of several tables of one store, pinned at one commit.
+
+    As a ``dict`` it maps each name in ``tables`` to its full-table frame.
+    It also keeps, for every table in ``schemas``, the ``{bucket: live
+    version}`` map resolved when it was built, so the key reads below open
+    the same snapshot's files however many commits land in between. A
+    pinned version that pruning has since removed, or a table dir swapped
+    for another since the pin (a rebuilt index), raises instead of
+    reading as an empty or different bucket."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        schemas: dict[str, StructType],
+        committed: list[int],
+        n_buckets: int,
+        tables: tuple[str, ...],
+    ):
+        self.spark = spark
+        self.root = root
+        self.schemas = schemas
+        self.n_buckets = n_buckets
+        self.versions = {
+            t: live_versions(os.path.join(root, t), set(committed)) for t in schemas
+        }
+        self._dir_ids = {t: _dir_id(os.path.join(root, t)) for t in schemas}
+        super().__init__({t: self.read_buckets(t, None) for t in tables})
+
+    def _pinned_dirs(self, table: str, buckets: set[int] | None) -> list[str]:
+        path = os.path.join(self.root, table)
+        if _dir_id(path) != self._dir_ids[table]:
+            raise ValueError(f"{table}: its dir was replaced since the pin; read the state again")
+        dirs = _bucket_dirs(path, self.versions[table], buckets)
+        gone = [b for b, d in dirs.items() if not os.path.isdir(d)]
+        if gone:
+            raise ValueError(
+                f"{table}: the pinned versions of buckets {gone} were pruned "
+                "by later commits; read the state again"
+            )
+        return list(dirs.values())
+
+    def read_buckets(self, table: str, buckets: set[int] | None) -> DataFrame:
+        """``table``'s pinned view; with ``buckets``, only those buckets."""
+        return _read_dirs(self.spark, self._pinned_dirs(table, buckets), self.schemas[table])
+
+    def read_key(self, table: str, key: tuple) -> DataFrame:
+        """The one pinned bucket of ``table`` that ``key`` (the values of
+        its bucket key) hashes into: the rows with that key, and others."""
+        return self.read_buckets(table, {key_bucket(key, self.n_buckets)})
+
+    def key_values(self, table: str, key: tuple, cols: tuple[str, ...], column: str) -> list:
+        """``column`` of the rows of ``table`` whose ``cols`` (its bucket
+        key) equal ``key``, read on the driver with pyarrow from the key's
+        one pinned bucket: no Spark job, for lookups into a small index."""
+        import pyarrow.dataset as pads
+
+        match = None
+        for c, v in zip(cols, key):
+            clause = pads.field(c) == v
+            match = clause if match is None else match & clause
+        out = []
+        for d in self._pinned_dirs(table, {key_bucket(key, self.n_buckets)}):
+            rows = pads.dataset(d, format="parquet").to_table(columns=[column], filter=match)
+            out += rows.column(column).to_pylist()
+        return out
 
 
 def prune_versions(path: str, committed: list[int], keep: int) -> None:

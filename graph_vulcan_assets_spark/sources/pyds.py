@@ -45,37 +45,20 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from graph_vulcan_assets_spark.sources.bucketstore import list_markers, table_versions
+from graph_vulcan_assets_spark.sources.bucketstore import (
+    list_markers,
+    table_versions,
+    xxhash64,
+)
 
 # --- Spark-compatible xxhash64 of a single BIGINT (seed 42) ---------------
-
-_M = (1 << 64) - 1
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M
 
 
 def xxhash64_long(value: int, seed: int = 42) -> int:
     """Bit-identical to Spark's ``xxhash64(<bigint col>)`` (XXH64 of the
     8-byte value with Spark's default seed 42); returns a signed 64-bit
     int like the JVM."""
-    v = value & _M
-    h = (seed + _P5 + 8) & _M
-    k1 = _rotl((v * _P2) & _M, 31)
-    h ^= (k1 * _P1) & _M
-    h = (_rotl(h, 27) * _P1 + _P4) & _M
-    h ^= h >> 33
-    h = (h * _P2) & _M
-    h ^= h >> 29
-    h = (h * _P3) & _M
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
+    return xxhash64((value % (1 << 64)).to_bytes(8, "little"), seed)
 
 
 def bucket_of_long(value: int, n_buckets: int) -> int:

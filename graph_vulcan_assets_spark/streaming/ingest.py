@@ -83,6 +83,7 @@ from graph_vulcan_assets_spark.plans.temporal import (
     tuned_for_batch,
 )
 from graph_vulcan_assets_spark.sources.bucketstore import (
+    PinnedState,
     acknowledge,
     bucket_of,
     list_markers,
@@ -112,6 +113,8 @@ BUCKET_KEYS: dict[str, tuple[str, ...]] = {
 # pointer can never go stale) and merged per touched index bucket on write.
 PARENT_IDX = "parent_idx"
 BUCKET_KEYS[PARENT_IDX] = ("parent_type", "parent_identifier")
+# marker file in the PARENT_IDX dir of a compacted index (live edges only)
+_LIVE_ONLY = "_live_edges_only"
 
 _log = get_logger("streaming.ingest")
 
@@ -220,10 +223,25 @@ class TemporalGraphStream:
             bucket_ids,
         )
 
-    def read_state(self) -> dict[str, DataFrame] | None:
-        if not self._applied_batches():
+    def read_state(self) -> PinnedState | None:
+        """The four state tables as of the newest acknowledged batch, as a
+        ``bucketstore.PinnedState``: a dict of full-table frames that
+        also pins every table's ``{bucket: live version}`` map,
+        ``PARENT_IDX`` included, and ``n_buckets``, so a key lookup
+        (``plans.api.InventoryAPI``) opens only its key's bucket of this
+        snapshot. ``PARENT_IDX`` is left out of the pin once
+        ``compact_parent_index`` has dropped the pointers of expired edges:
+        it no longer finds every edge of a parent. None before the first
+        acknowledged batch."""
+        applied = self._applied_batches()
+        if not applied:
             return None
-        return {t: self._read_buckets(t, None) for t in STATE_TABLES}
+        schemas = dict(self._schemas)
+        if os.path.exists(os.path.join(self.state_dir, PARENT_IDX, _LIVE_ONLY)):
+            del schemas[PARENT_IDX]
+        return PinnedState(
+            self.spark, self.state_dir, schemas, applied, self.n_buckets, STATE_TABLES
+        )
 
     def _tagged_bucket(self) -> Column:
         """Bucket id of a row of the tagged state union
@@ -374,6 +392,8 @@ class TemporalGraphStream:
         # buckets exactly as with a normal write
         newest = self._applied_batches()[-1]
         self._write_index(rebuilt, os.path.join(staging, f"batch={newest}"))
+        # travels with the swap: from now on the index misses expired edges
+        open(os.path.join(staging, _LIVE_ONLY), "w").close()
         with open(os.path.join(staging, "_ready"), "w") as f:
             f.write("ok")
         self._finish_index_compaction()
